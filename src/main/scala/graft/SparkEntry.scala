@@ -493,16 +493,12 @@ object SparkEntry {
     val ops = EventsAsCdc.opsFromEvents(spark, t(spark, dir, "events"))
     val stamped = TransactionAssembler.assemble(ops, sizeLimit = Int.MaxValue).toDF()
     val cells = TimeMachineSink.organize(TimeMachineSink.mutationCells(stamped))
-    val latest = TimeMachineSink.latestCellsOf(cells)
-      .groupBy("table", "row_key")
-      .agg(map_from_entries(collect_list(struct(col("column"), col("value")))).as("cols"),
-        max(col("cell_ts")).as("last_ts"))
-    latest.select(col("table"), col("row_key"),
+    TimeMachineSink.rowsAsOfCells(cells).select(col("table"), col("row_key"),
       MysqlValues.saltedRowKey(Seq(col("table"), col("row_key"))).as("salted_key"),
       element_at(col("cols"), "value").as("last_value"),
       element_at(col("cols"), "event_type").as("last_event_type"),
       element_at(col("cols"), "row_status").as("row_status"),
-      col("last_ts"))
+      col("state_ts").as("last_ts"))
   }
 
   // ==========================================================================

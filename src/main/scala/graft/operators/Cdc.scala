@@ -26,10 +26,16 @@ object Cdc {
     * shouldAugmentTable is `!excluded && included`). A plain `filter`, so it
     * pushes into the scan (PushedFilters) — at 100 TB the excluded tables'
     * row groups are never read when the source is partitioned by table. */
-  def tableFilter(df: DataFrame, tableCol: Column, include: Seq[String], excludePattern: Option[String]): DataFrame = {
+  def tableFilter(df: DataFrame, tableCol: Column, include: Seq[String], excludePattern: Option[String]): DataFrame =
+    df.filter(tableGate(tableCol, include, excludePattern))
+
+  /** The predicate behind [[tableFilter]]: `excludePattern` is an `rlike`
+    * regex, so it matches anywhere in the name unless anchored, and an
+    * excluded table fails even when it is in `include`. */
+  def tableGate(tableCol: Column, include: Seq[String], excludePattern: Option[String]): Column = {
     val inc: Column = if (include.nonEmpty) tableCol.isin(include: _*) else lit(true)
     val exc: Column = excludePattern.map(p => tableCol.rlike(p)).getOrElse(lit(false))
-    df.filter(inc && !exc)
+    inc && !exc
   }
 
   /** Table-name merge: strip a regex suffix so time-sharded physical tables

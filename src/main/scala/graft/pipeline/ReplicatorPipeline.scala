@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.Cdc
 import graft.streaming.{Op, StampedOp, TimeMachineSink, TransactionAssembler}
 import graft.sink.Sinks
 
@@ -23,8 +24,6 @@ final case class PipelineConfig(
     tables: TableFilterConfig = TableFilterConfig(),
     partitioner: String = "TRID",      // reference default (Partitioner.java:98-102)
     partitions: Int = 8,                // reference prod sample: 8 tasks
-    txnSizeLimit: Int = 1000,           // reference transaction buffer limit
-    validationSampleN: Int = 100,       // reference ValidationService default
     validationDir: Option[String] = None,
     /** Designated per-transaction context-log table: its rows are keyed by
       * transaction UUID instead of the PK row key (reference:
@@ -40,11 +39,6 @@ final case class PipelineConfig(
       * (reference: KafkaApplier.handleIncompatibleSchemaChange,
       * KafkaApplier.java:261-287). */
     schemaRegistryDir: Option[String] = None,
-    /** Opt-in eviction of transactions with no COMMIT (processing-time state
-      * timeout). Off by default: per-txn state is already bounded by the
-      * oversize-chunk guard, and timeout triggers interact badly with
-      * test-style processAllAvailable draining. */
-    abandonedTxnTimeout: Boolean = false,
     /** Decode row images through the versioned catalog BEFORE the sink —
       * the reference's DataAugmenter order (cells land decoded, each row
       * against the schema version active at its position:
@@ -54,51 +48,44 @@ final case class PipelineConfig(
       * read side; turn on when downstream consumers read the sink
       * directly. */
     decodeWithCatalog: Boolean = false
-)
+) {
+  require(!decodeWithCatalog || schemaCatalog.isDefined, "decodeWithCatalog requires a schemaCatalog")
+}
 
+/** Which tables the pipeline replicates — a whitelist AND a blacklist
+  * (reference: AugmenterContext.java:711-730, shouldAugmentTable is
+  * `!excluded && included`). `excludePattern` is an `rlike` regex, so it
+  * matches anywhere in the table name unless anchored (`^...$`); exclusion
+  * beats inclusion; an empty `include` admits every table. BEGIN, COMMIT
+  * and DDL ops are never gated: transaction boundaries and schema changes
+  * flow through whatever the table filter says. */
 final case class TableFilterConfig(include: Seq[String] = Nil, excludePattern: Option[String] = None)
 
 object ReplicatorPipeline {
 
-  /** The shared transform: ops → committed stamped rows, filtered and routed.
-    * Works identically over a batch Dataset and a streaming one (the
-    * assembler's flatMapGroupsWithState runs in both modes). */
+  /** The reference ValidationService default: about one mutation in 100
+    * becomes a validation task (see [[Sinks.validationSample]]). */
+  val ValidationSampleN = 100
+
+  /** The shared transform: ops → committed stamped rows of the gated tables.
+    * Works over a batch Dataset and a streaming one with the same commit
+    * semantics: bounded input (backfills, the binlog-flusher analog) takes
+    * the column-native [[TransactionAssembler.assembleBatch]], a stream the
+    * stateful [[TransactionAssembler.assemble]]. */
   def transform(ops: Dataset[Op], cfg: PipelineConfig): Dataset[StampedOp] = {
-    // whitelist AND blacklist (reference: AugmenterContext.java:711-730
-    // shouldAugmentTable = !excluded && included): a table must pass BOTH
-    // gates — not be excluded, and be in the include list when one is set.
-    val filtered =
-      if (cfg.tables.include.isEmpty && cfg.tables.excludePattern.isEmpty) ops
-      else ops.filter { op =>
-        op.kind == "BEGIN" || op.kind == "COMMIT" || op.kind == "DDL" || {
-          (cfg.tables.include.isEmpty || cfg.tables.include.contains(op.table)) &&
-            cfg.tables.excludePattern.forall(p => !op.table.matches(p))
-        }
-      }
-    if (!filtered.isStreaming) {
-      // bounded input (backfills, binlog-flusher analog): the column-native
-      // window formulation — identical semantics, no GroupState encoder
-      // round-trips, whole-stage codegen end-to-end
-      TransactionAssembler.assembleBatch(filtered)
-    } else {
-      val timeout =
-        if (cfg.abandonedTxnTimeout)
-          org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout()
-        else org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()
-      TransactionAssembler.assemble(filtered, cfg.txnSizeLimit, timeout)
-    }
+    val gate = Cdc.tableGate(col("table"), cfg.tables.include, cfg.tables.excludePattern)
+    val filtered = ops.filter(col("kind").isin("BEGIN", "COMMIT", "DDL") || gate)
+    if (filtered.isStreaming) TransactionAssembler.assemble(filtered)
+    else TransactionAssembler.assembleBatch(filtered)
   }
 
   /** Route a stamped micro-batch by the configured partitioner strategy
     * (reference: Partitioner.java:14-103) before the sink write. */
-  def route(df: DataFrame, cfg: PipelineConfig): DataFrame = cfg.partitioner match {
-    case "TRID"       => df.repartition(cfg.partitions, col("txnUuid"))
-    case "XXID"       => df.repartition(cfg.partitions, col("xxid"))
-    case "TABLE_NAME" => df.repartition(cfg.partitions, col("table"))
-    case "RANDOM"     => df.repartition(cfg.partitions)
-    case "NONE"       => df.coalesce(1)
-    case other        => throw new IllegalArgumentException(s"unknown partitioner $other")
-  }
+  def route(df: DataFrame, cfg: PipelineConfig): DataFrame =
+    Cdc.repartitionBy(df, cfg.partitioner, cfg.partitions, routeKeys.get(cfg.partitioner).map(col))
+
+  /** The stamped-row column each hashing strategy routes on. */
+  private val routeKeys = Map("TRID" -> "txnUuid", "XXID" -> "xxid", "TABLE_NAME" -> "table")
 
   /** One micro-batch through the sink side: DDL barrier events update the
     * versioned schema catalog sequentially (binlog order = eventId order)
@@ -138,12 +125,9 @@ object ReplicatorPipeline {
     // that precede an in-batch barrier still resolve to the older version
     // by position — the when-chain keys on commitTsMs, not batch order)
     val routed =
-      if (cfg.decodeWithCatalog) cfg.schemaCatalog match {
-        case Some(cat) =>
-          graft.augment.RowDecoder.decodeAllTablesVersioned(routed0, col("commitTsMs"), cat)
-        case None => throw new IllegalArgumentException(
-          "decodeWithCatalog requires a schemaCatalog")
-      } else routed0
+      if (cfg.decodeWithCatalog)
+        graft.augment.RowDecoder.decodeAllTablesVersioned(routed0, col("commitTsMs"), cfg.schemaCatalog.get)
+      else routed0
     val df = cfg.payloadTable match {
       case Some(p) => routed.withColumn("rowKey",
         when(col("table") === p, col("txnUuid")).otherwise(col("rowKey")))
@@ -151,7 +135,7 @@ object ReplicatorPipeline {
     }
     TimeMachineSink.write(df, cfg.sinkDir, batchId)
     cfg.validationDir.foreach { vd =>
-      Sinks.validationSample(df, cfg.validationSampleN, "rowKey")
+      Sinks.validationSample(df, ValidationSampleN, "rowKey")
         .write.mode("append").parquet(vd)
     }
   }

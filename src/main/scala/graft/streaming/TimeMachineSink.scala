@@ -99,12 +99,9 @@ object TimeMachineSink {
       .filter(col("__v") <= maxVersions).drop("__v")
   }
 
-  /** Read path: latest value of every (table, row_key, column) — the "now"
-    * view of the time machine. max_by aggregates partial map-side (shuffle
+  /** Read path: latest value of every (table, row_key, column) by
+    * (cell_ts, event_id). max_by aggregates partial map-side (shuffle
     * carries one row per key-column per input partition, not all versions). */
-  def latestCells(spark: SparkSession, sinkDir: String): DataFrame =
-    latestCellsOf(spark.read.parquet(sinkDir))
-
   def latestCellsOf(cells: DataFrame): DataFrame =
     cells.groupBy("table", "row_key", "column")
       .agg(max_by(col("value"), struct(col("cell_ts"), col("event_id"))).as("value"),
@@ -367,23 +364,13 @@ object TimeMachineSink {
   }
 
   /** Latest rows over the bucketed table — plan contains no Exchange. */
-  def latestRowsBucketed(spark: SparkSession, tableName: String): DataFrame = {
-    val cells = latestCellsOf(spark.table(tableName))
-    cells.groupBy("table", "row_key")
-      .agg(map_from_entries(collect_list(struct(col("column"), col("value")))).as("cols"),
-        max(col("cell_ts")).as("last_ts"))
-      .filter(element_at(col("cols"), "row_status") =!= "D")
-  }
+  def latestRowsBucketed(spark: SparkSession, tableName: String): DataFrame =
+    rowsAsOfCells(spark.table(tableName))
 
-  /** Current rows: pivot latest cells back to a map per row, dropping rows
-    * whose latest row_status is a DELETE. */
-  def latestRows(spark: SparkSession, sinkDir: String): DataFrame = {
-    val cells = latestCells(spark, sinkDir)
-    cells.groupBy("table", "row_key")
-      .agg(map_from_entries(collect_list(struct(col("column"), col("value")))).as("cols"),
-        max(col("cell_ts")).as("last_ts"))
-      .filter(element_at(col("cols"), "row_status") =!= "D")
-  }
+  /** Current rows — the "now" view of the time machine: the as-of read
+    * over every version (see [[rowsAsOfCells]]). */
+  def latestRows(spark: SparkSession, sinkDir: String): DataFrame =
+    rowsAsOfCells(spark.read.parquet(sinkDir))
 
   /** As-of read: state of every row at time `asOfMicros` — the time-machine
     * query the reference's HBase layout answers with timestamped gets. */
@@ -569,13 +556,9 @@ object TimeMachineSink {
     * row_status is a DELETE marker don't exist at T and are dropped. This
     * is the general point-in-time reconstruction: run over the bucketed
     * cell table ([[writeBucketed]]) both aggregations are Exchange-free. */
-  def rowsAsOfCells(liveCells: DataFrame): DataFrame = {
-    val latest = liveCells.groupBy("table", "row_key", "column")
-      .agg(max_by(col("value"), struct(col("cell_ts"), col("event_id"))).as("value"),
-        max(col("cell_ts")).as("cell_ts"))
-    latest.groupBy("table", "row_key")
+  def rowsAsOfCells(liveCells: DataFrame): DataFrame =
+    latestCellsOf(liveCells).groupBy("table", "row_key")
       .agg(map_from_entries(collect_list(struct(col("column"), col("value")))).as("cols"),
         max(col("cell_ts")).as("state_ts"))
       .filter(element_at(col("cols"), "row_status") =!= "D")
-  }
 }

@@ -76,57 +76,46 @@ object TransactionAssembler {
     if (ordered) arr else arr.sortInPlaceBy(key)
   }
 
-  def assemble(ops: Dataset[Op], sizeLimit: Int = 1000,
-               timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout()): Dataset[StampedOp] = {
+  /** The reference's transaction buffer limit: a transaction with more
+    * buffered rows than this emits in chunks. */
+  val DefaultSizeLimit = 1000
+
+  def assemble(ops: Dataset[Op], sizeLimit: Int = DefaultSizeLimit): Dataset[StampedOp] = {
     implicit val opEnc = Encoders.product[Op]
     implicit val outEnc = Encoders.product[StampedOp]
     implicit val stateEnc = Encoders.product[TxnBuffer]
     implicit val keyEnc = Encoders.STRING
 
     ops.groupByKey(_.txnId)
-      .flatMapGroupsWithState[TxnBuffer, StampedOp](OutputMode.Append(), timeout) {
+      .flatMapGroupsWithState[TxnBuffer, StampedOp](OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (txnId: String, incoming: Iterator[Op], state: GroupState[TxnBuffer]) =>
-          if (state.hasTimedOut) {
-            // abandoned transaction: drop buffered ops, free state
-            state.remove()
-            Iterator.empty
-          } else {
-            var buf = state.getOption.getOrElse(TxnBuffer(Nil, 0))
-            val out = List.newBuilder[StampedOp]
-            // binlog order within a group = eventId order
-            nearSorted(incoming)(_.eventId).foreach { op =>
-              op.kind match {
-                case "BEGIN" => // explicit begin: fresh buffer (keep chunk count)
-                  buf = TxnBuffer(Nil, buf.chunksEmitted)
-                case "COMMIT" =>
+          var buf = state.getOption.getOrElse(TxnBuffer(Nil, 0))
+          val out = List.newBuilder[StampedOp]
+          // binlog order within a group = eventId order
+          nearSorted(incoming)(_.eventId).foreach { op =>
+            op.kind match {
+              case "BEGIN" => // explicit begin: fresh buffer (keep chunk count)
+                buf = TxnBuffer(Nil, buf.chunksEmitted)
+              case "COMMIT" =>
+                out ++= stamp(buf.ops.reverse, txnId, op.xxid, op.tsMs, buf.chunksEmitted)
+                buf = TxnBuffer(Nil, 0)
+              case "DDL" =>
+                // DDL is a non-transactional barrier in the binlog: emit
+                // immediately, stamped at its own timestamp (reference:
+                // Augmenter.java:210-225 — schema snapshot on DDL events)
+                out += StampedOp(txnId, op.xxid, op.tsMs, 0, op.eventId, op.tsMs,
+                  op.table, "DDL", op.rowKey, op.before, op.after)
+              case _ =>
+                buf = buf.copy(ops = op :: buf.ops)
+                if (buf.ops.length >= sizeLimit) {
+                  // oversize: chunked partial emit stamped with last-seen ts
                   out ++= stamp(buf.ops.reverse, txnId, op.xxid, op.tsMs, buf.chunksEmitted)
-                  buf = TxnBuffer(Nil, 0)
-                case "DDL" =>
-                  // DDL is a non-transactional barrier in the binlog: emit
-                  // immediately, stamped at its own timestamp (reference:
-                  // Augmenter.java:210-225 — schema snapshot on DDL events)
-                  out += StampedOp(txnId, op.xxid, op.tsMs, 0, op.eventId, op.tsMs,
-                    op.table, "DDL", op.rowKey, op.before, op.after)
-                case _ =>
-                  buf = buf.copy(ops = op :: buf.ops)
-                  if (buf.ops.length >= sizeLimit) {
-                    // oversize: chunked partial emit stamped with last-seen ts
-                    out ++= stamp(buf.ops.reverse, txnId, op.xxid, op.tsMs, buf.chunksEmitted)
-                    buf = TxnBuffer(Nil, buf.chunksEmitted + 1)
-                  }
-              }
+                  buf = TxnBuffer(Nil, buf.chunksEmitted + 1)
+                }
             }
-            if (buf.ops.isEmpty && buf.chunksEmitted == 0) state.remove()
-            else {
-              state.update(buf)
-              timeout match {
-                case t if t == GroupStateTimeout.ProcessingTimeTimeout() =>
-                  state.setTimeoutDuration("1 hour")
-                case _ => ()
-              }
-            }
-            out.result().iterator
           }
+          if (buf.ops.isEmpty && buf.chunksEmitted == 0) state.remove() else state.update(buf)
+          out.result().iterator
       }
   }
 

@@ -334,6 +334,8 @@ class StreamingSpec extends SparkTestBase {
       .select(col("row_key"), col("value")).as[(String, String)].collect().toMap
     assert(lifespans("1") == "-13", s"pre-barrier row must decode as signed INT: $lifespans")
     assert(lifespans("2") == "65523", s"post-barrier row must decode unsigned: $lifespans")
+    // without a catalog the config is rejected up front, not mid-batch
+    intercept[IllegalArgumentException](PipelineConfig(sink, "/tmp/unused-ckpt", decodeWithCatalog = true))
   }
 
   test("validation loop: source-vs-target compare finds drift and missing rows") {
@@ -350,33 +352,68 @@ class StreamingSpec extends SparkTestBase {
     val mismatches = Sinks.validateAgainstSource(source, "k", Seq("v"), latest)
       .select("row_key").as[String].collect().toSet
     assert(mismatches == Set("2", "3"))
+    // the "now" view is the as-of read at the end of time
+    assert(latest.collect().toSet == TimeMachineSink.rowsAsOf(spark, sink, Long.MaxValue).collect().toSet)
   }
 
   test("table filter config: whitelist AND blacklist in the pipeline transform") {
     // reference semantics (AugmenterContext.java:711-730): a table passes
-    // only if NOT excluded AND (include list empty OR table included)
+    // only if NOT excluded AND (include list empty OR table included);
+    // BEGIN/COMMIT/DDL ops are never gated. Every case also runs through
+    // runBatch and a streaming start with a schemaCatalog set, which the
+    // gate must not capture (SchemaCatalog is not serializable).
+    implicit val sq = spark.sqlContext
     val ops = Seq(
-      op("BEGIN", "t1", 1),
-      op("INSERT", "t1", 2, table = "keep_2018", after = Map("a" -> "1")),
-      op("INSERT", "t1", 3, table = "drop_2018", after = Map("a" -> "2")),
-      op("INSERT", "t1", 4, table = "plain", after = Map("a" -> "3")),
-      op("COMMIT", "t1", 5)).toDS()
-    // include-only: unlisted tables must NOT pass
-    val incOnly = PipelineConfig("/tmp/x", "/tmp/y",
-      tables = TableFilterConfig(include = Seq("plain")))
-    assert(ReplicatorPipeline.transform(ops, incOnly).collect().map(_.table).toSet
-      == Set("plain"))
+      Op("DDL", "ddl1", 0, 1, 1704067100000L, "other", "",
+        Map.empty, Map("ddl" -> "CREATE TABLE other (id INT PRIMARY KEY)")),
+      op("BEGIN", "t1", 2),
+      op("INSERT", "t1", 3, table = "keep_2018", after = Map("a" -> "1")),
+      op("INSERT", "t1", 4, table = "drop_2018", after = Map("a" -> "2")),
+      op("INSERT", "t1", 5, table = "plain", after = Map("a" -> "3")),
+      op("INSERT", "t1", 6, table = "x_audit_log", after = Map("a" -> "4")),
+      op("COMMIT", "t1", 7))
+    def check(tables: TableFilterConfig, want: Set[String]): Unit = {
+      def cfg(sink: String, ckpt: String) = PipelineConfig(sink, ckpt, tables = tables,
+        partitions = 2, triggerMs = 0L, schemaCatalog = Some(new graft.augment.SchemaCatalog("mydb")))
+      def sinkTables(sink: String) =
+        spark.read.parquet(sink).select("table").distinct().as[String].collect().toSet
+      // transform: the DDL barrier passes whatever the gate says
+      val stamped = ReplicatorPipeline.transform(ops.toDS(), cfg("/tmp/x", "/tmp/y")).collect()
+      assert(stamped.filter(_.kind != "DDL").map(_.table).toSet == want, s"transform, $tables")
+      assert(stamped.filter(_.kind == "DDL").map(_.table).toSeq == Seq("other"))
+      // runBatch
+      val batchSink = Files.createTempDirectory("tfbatch").toString
+      val batchCfg = cfg(batchSink, "/tmp/unused")
+      ReplicatorPipeline.runBatch(ops.toDS(), batchCfg)
+      assert(sinkTables(batchSink) == want, s"runBatch, $tables")
+      assert(batchCfg.schemaCatalog.get.current("other").isDefined)
+      // streaming start
+      val streamSink = Files.createTempDirectory("tfstream").toString
+      val streamCfg = cfg(streamSink, Files.createTempDirectory("tfck").toString)
+      val mem = MemoryStream[Op]
+      val q = ReplicatorPipeline.start(mem.toDS(), streamCfg)
+      try {
+        mem.addData(ops: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(sinkTables(streamSink) == want, s"start, $tables")
+      assert(streamCfg.schemaCatalog.get.current("other").isDefined)
+    }
+    // include-only: unlisted tables must NOT pass; the unlisted BEGIN,
+    // COMMIT ("t") and DDL ("other") ops still do
+    check(TableFilterConfig(include = Seq("plain")), Set("plain"))
     // include + exclude: an included-but-excluded table must NOT pass
-    val both = PipelineConfig("/tmp/x", "/tmp/y",
-      tables = TableFilterConfig(include = Seq("keep_2018", "plain"),
-        excludePattern = Some(".*_\\d+$")))
-    assert(ReplicatorPipeline.transform(ops, both).collect().map(_.table).toSet
-      == Set("plain"))
+    check(TableFilterConfig(include = Seq("keep_2018", "plain"), excludePattern = Some(".*_\\d+$")),
+      Set("plain"))
     // exclude-only
-    val excOnly = PipelineConfig("/tmp/x", "/tmp/y",
-      tables = TableFilterConfig(excludePattern = Some(".*_\\d+$")))
-    assert(ReplicatorPipeline.transform(ops, excOnly).collect().map(_.table).toSet
-      == Set("plain"))
+    check(TableFilterConfig(excludePattern = Some(".*_\\d+$")), Set("plain", "x_audit_log"))
+    // an unanchored exclude pattern matches anywhere in the name
+    check(TableFilterConfig(excludePattern = Some("audit_")), Set("keep_2018", "drop_2018", "plain"))
+    // an unset gate costs nothing: Catalyst prunes the always-true filter
+    val ds = ops.toDS()
+    def plan(d: org.apache.spark.sql.Dataset[_]) = d.queryExecution.optimizedPlan.toString.replaceAll("#\\d+", "")
+    assert(plan(ReplicatorPipeline.transform(ds, PipelineConfig("/tmp/x", "/tmp/y")))
+      == plan(TransactionAssembler.assembleBatch(ds)))
   }
 
   test("maintainKeyedJoin: untouched rows carry verbatim, touched keys " +
