@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Cdc
 import graft.streaming.{Op, StampedOp, TimeMachineSink, TransactionAssembler}
@@ -91,14 +92,29 @@ object ReplicatorPipeline {
     * versioned schema catalog sequentially (binlog order = eventId order)
     * and land in the history sink (reference: Augmenter.java:210-225 +
     * HBaseSchemaManager.writeSchemaSnapshot); row events become versioned
-    * cells; sampled validation tasks emit beside them. */
-  private def writeBatch(batch: Dataset[StampedOp], cfg: PipelineConfig, batchId: Long = -1L): Unit = {
+    * cells; sampled validation tasks emit beside them.
+    *
+    * With a schema catalog or a validation dir set the batch has several
+    * readers, so it is persisted (MEMORY_AND_DISK) until the batch ends,
+    * also on failure: the DDL collect, or else the sink write, fills the
+    * cache that the sink write and the validation sample read, and the
+    * assembler's window or a stream's stateful operators run once per
+    * batch. With neither set the sink write is the one reader and nothing
+    * is persisted. */
+  private def writeBatch(stamped: Dataset[StampedOp], cfg: PipelineConfig, batchId: Long = -1L): Unit = {
+    val shared = cfg.schemaCatalog.isDefined || cfg.validationDir.isDefined
+    val batch = if (shared) stamped.persist(StorageLevel.MEMORY_AND_DISK) else stamped
+    try writeStamped(batch, cfg, batchId)
+    finally if (shared) batch.unpersist()
+  }
+
+  private def writeStamped(batch: Dataset[StampedOp], cfg: PipelineConfig, batchId: Long): Unit = {
     val spark = batch.sparkSession
     cfg.schemaCatalog.foreach { cat =>
       // DDL is rare and tiny: collecting it to the driver is O(statements),
       // and catalog updates MUST be sequential — this is the one place the
       // reference's single-threaded semantics are load-bearing.
-      val ddls = batch.filter(_.kind == "DDL").collect().sortBy(_.eventId)
+      val ddls = batch.filter(col("kind") === "DDL").collect().sortBy(_.eventId)
       val txBefore = cat.transitions.length
       ddls.foreach(d => cat.applyDdl(d.after.getOrElse("ddl", ""), d.commitTsMs))
       if (ddls.nonEmpty) {
@@ -120,7 +136,7 @@ object ReplicatorPipeline {
         }
       }
     }
-    val routed0 = route(batch.filter(_.kind != "DDL").toDF(), cfg)
+    val routed0 = route(batch.filter(col("kind") =!= "DDL").toDF(), cfg)
     // versioned decode AFTER the catalog absorbed this batch's DDL (rows
     // that precede an in-batch barrier still resolve to the older version
     // by position — the when-chain keys on commitTsMs, not batch order)

@@ -416,6 +416,171 @@ class StreamingSpec extends SparkTestBase {
       == plan(TransactionAssembler.assembleBatch(ds)))
   }
 
+  /** An augment-lane op log in two halves: a CREATE and a transaction, then
+    * an ALTER TABLE … ADD COLUMN and a transaction that writes the new
+    * column (SMALLINT UNSIGNED, so the versioned decode changes the value).
+    * Three row keys are ones the 1-in-100 validation sample keeps. */
+  private def augmentOps(): (Seq[Op], Seq[Op]) = {
+    val Seq(a, b, c) = (0 until 5000).map(i => s"r$i").toDF("k")
+      .filter(pmod(xxhash64(col("k")), lit(ReplicatorPipeline.ValidationSampleN.toLong)) === 0)
+      .as[String].collect().take(3).toSeq
+    def row(kind: String, txn: String, ev: Long, key: String, before: Map[String, String],
+            after: Map[String, String], ts: Long) =
+      op(kind, txn, ev, table = "organisms", key = key, before = before, after = after, ts = ts)
+    val first = Seq(
+      Op("DDL", "ddl1", 0, 1, 500L, "organisms", "", Map.empty,
+        Map("ddl" -> "CREATE TABLE organisms (id INT PRIMARY KEY, name VARCHAR(30))")),
+      op("BEGIN", "t1", 2, table = "organisms", ts = 1000L),
+      row("INSERT", "t1", 3, a, null, Map("id" -> "1", "name" -> "cat"), 1000L),
+      row("INSERT", "t1", 4, b, null, Map("id" -> "2", "name" -> "dog"), 1000L),
+      row("INSERT", "t1", 5, "unsampled", null, Map("id" -> "4", "name" -> "ant"), 1000L),
+      op("COMMIT", "t1", 6, table = "organisms", ts = 1000L))
+    val second = Seq(
+      Op("DDL", "ddl2", 0, 7, 1500L, "organisms", "", Map.empty,
+        Map("ddl" -> "ALTER TABLE organisms ADD COLUMN lifespan SMALLINT UNSIGNED")),
+      op("BEGIN", "t2", 8, table = "organisms", ts = 2000L),
+      row("INSERT", "t2", 9, c, null, Map("id" -> "3", "name" -> "eel", "lifespan" -> "20"), 2000L),
+      row("UPDATE", "t2", 10, a, Map("id" -> "1", "name" -> "cat"),
+        Map("id" -> "1", "name" -> "cat", "lifespan" -> "-13"), 2000L),
+      op("COMMIT", "t2", 11, table = "organisms", ts = 2000L))
+    (first, second)
+  }
+
+  /** The augment lane's config: catalog, versioned decode, history,
+    * registry and validation, each under `dir` unless `validation` says
+    * otherwise. */
+  private def augmentCfg(dir: String, validation: Option[String] = None): PipelineConfig =
+    PipelineConfig(s"$dir/sink", s"$dir/ckpt", partitions = 2, triggerMs = 0L,
+      validationDir = validation.orElse(Some(s"$dir/validation")),
+      schemaCatalog = Some(new graft.augment.SchemaCatalog("mydb")),
+      schemaHistoryDir = Some(s"$dir/history"), schemaRegistryDir = Some(s"$dir/registry"),
+      decodeWithCatalog = true)
+
+  test("writeBatch releases the batch it persists, also when a write fails") {
+    val (first, second) = augmentOps()
+    val ops = (first ++ second).toDS()
+    spark.catalog.clearCache() // whatever earlier specs left cached
+    val dir = Files.createTempDirectory("release").toString
+    ReplicatorPipeline.runBatch(ops, augmentCfg(dir))
+    assert(spark.read.parquet(s"$dir/validation").count() == 4) // 3 sampled keys, 4 row events
+    assert(spark.sharedState.cacheManager.isEmpty, "runBatch left its batch cached")
+    // the validation write fails: its dir is a regular file
+    val notADir = Files.createTempFile("validation", ".txt").toString
+    val failing = Files.createTempDirectory("releasefail").toString
+    intercept[Exception](ReplicatorPipeline.runBatch(ops, augmentCfg(failing, Some(notADir))))
+    assert(spark.read.parquet(s"$failing/sink").count() > 0) // the sink write ran first
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed write left the batch cached")
+  }
+
+  test("writeBatch plans: with a catalog and validation both writes scan the cached " +
+      "stamped batch, not the assembler; the ops config caches nothing") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    // executed plans of the parquet writes, by output dir
+    val writes = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        Plans.collect(qe.executedPlan) { case w: DataWritingCommandExec => w.cmd }.foreach {
+          case c: InsertIntoHadoopFsRelationCommand => writes.put(c.outputPath.toUri.getPath, qe.executedPlan)
+          case _ =>
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def await(dirs: String*): Seq[SparkPlan] = { // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!dirs.forall(writes.containsKey) && System.nanoTime() < deadline) Thread.sleep(20)
+      dirs.map(d => Option(writes.get(d)).getOrElse(fail(s"no write plan captured for $d")))
+    }
+    def txnWindows(p: SparkPlan) = Plans.collect(p) {
+      case w: WindowExec if w.partitionSpec.flatMap(_.references).exists(_.name == "txnId") => w
+    }
+    val (first, second) = augmentOps()
+    val ops = (first ++ second).toDS()
+    val stampedCols = Encoders.product[graft.streaming.StampedOp].schema.fieldNames.toSeq
+    spark.listenerManager.register(listener)
+    try {
+      val dir = Files.createTempDirectory("plancached").toString
+      ReplicatorPipeline.runBatch(ops, augmentCfg(dir))
+      for ((name, plan) <- Seq("sink", "validation").zip(await(s"$dir/sink", s"$dir/validation"))) {
+        val scans = Plans.collect(plan) { case s: InMemoryTableScanExec => s }
+        assert(scans.nonEmpty, s"$name write does not read the cached batch:\n$plan")
+        scans.foreach { s =>
+          assert(s.relation.output.map(_.name) == stampedCols, s"$name caches something else:\n$plan")
+          assert(txnWindows(s.relation.cachedPlan).nonEmpty, s"$name cache is not the assembled batch")
+        }
+        assert(txnWindows(plan).isEmpty, s"$name write re-runs the assembler window:\n$plan")
+      }
+      // the stream_ops config: one reader, nothing persisted, the plan as it was
+      val opsDir = Files.createTempDirectory("planops").toString
+      ReplicatorPipeline.runBatch(ops, PipelineConfig(s"$opsDir/sink", s"$opsDir/ckpt",
+        partitioner = "TRID", partitions = 2, triggerMs = 0L))
+      val Seq(plain) = await(s"$opsDir/sink")
+      assert(!plain.treeString.contains("InMemoryRelation"), s"ops config cached its batch:\n$plain")
+      assert(txnWindows(plain).nonEmpty, s"ops config sink write lost its assembler:\n$plain")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("augment lane under foreachBatch: catalog, decode, history, registry and " +
+      "validation with ADD COLUMN in the second micro-batch match runBatch") {
+    implicit val sq = spark.sqlContext
+    val (first, second) = augmentOps()
+    spark.catalog.clearCache()
+    val batchDir = Files.createTempDirectory("augbatch").toString
+    val batchCfg = augmentCfg(batchDir)
+    ReplicatorPipeline.runBatch((first ++ second).toDS(), batchCfg)
+    val streamDir = Files.createTempDirectory("augstream").toString
+    val streamCfg = augmentCfg(streamDir)
+    val mem = MemoryStream[Op]
+    val q = ReplicatorPipeline.start(mem.toDS(), streamCfg)
+    try {
+      mem.addData(first: _*)
+      q.processAllAvailable()
+      mem.addData(second: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.exception.isEmpty, q.exception.toString)
+    assert(spark.sharedState.cacheManager.isEmpty, "a micro-batch left its batch cached")
+
+    def multiset(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.groupBy(identity).map {
+      case (r, rs) => r -> rs.size
+    }
+    def cells(dir: String) = spark.read.parquet(s"$dir/sink")
+      .select("table", "row_key", "column", "value", "cell_ts", "event_id")
+    assert(multiset(cells(streamDir)) == multiset(cells(batchDir)))
+    // the post-ALTER update decoded against the new version: -13 as SMALLINT UNSIGNED
+    val lifespans = cells(streamDir).filter(col("column") === "lifespan")
+      .select("value").as[String].collect().toSet
+    assert(lifespans == Set("20", "65523"), s"lifespans $lifespans")
+    // validation rows; the task's emitted_at is a wall clock, its key is not
+    def validation(dir: String) = spark.read.parquet(s"$dir/validation")
+      .withColumn("task_key", get_json_object(col("validation_task"), "$.key"))
+      .drop("validation_task")
+    assert(multiset(validation(streamDir)) == multiset(validation(batchDir)))
+    assert(validation(streamDir).count() == 4)
+
+    for (cfg <- Seq(batchCfg, streamCfg); cat = cfg.schemaCatalog.get) {
+      assert(cat.versionsOf("organisms").map(_.version) == Seq(0, 1))
+      assert(cat.current("organisms").get.columns.map(_.name) == Seq("id", "name", "lifespan"))
+    }
+    assert(spark.read.parquet(s"$streamDir/history").count() ==
+      spark.read.parquet(s"$batchDir/history").count())
+    // the registry syncs once per batch whose DDL touched the table: the
+    // stream registers after each half, the backfill once; the latest
+    // schema is the same
+    val subject = graft.sink.AvroPresenter.subject("mydb", "organisms")
+    def registry(dir: String) = new graft.sink.FileSchemaRegistry(s"$dir/registry")
+    def latest(dir: String) = registry(dir).schemaOf(subject, registry(dir).versions(subject).max)
+    assert(registry(streamDir).versions(subject) == Seq(1, 2))
+    assert(latest(streamDir) == latest(batchDir))
+  }
+
   test("maintainKeyedJoin: untouched rows carry verbatim, touched keys " +
       "re-join from new state, keys absent from either side drop") {
     import graft.streaming.TimeMachineSink
