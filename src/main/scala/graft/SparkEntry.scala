@@ -609,9 +609,9 @@ object SparkEntry {
       // (roughly half the rows exist, late rows don't yet, and a row whose
       // 50µs intra-txn band straddles T reconstructs PARTIAL state —
       // exactly the timestamped-get semantic). In production T is
-      // user-supplied and the read is the two map-side-partial
-      // aggregations of rowsAsOfCells only — Exchange-free over the
-      // bucketed cell table.
+      // user-supplied and the read is rowsAsOfCells' one (table, row_key)
+      // exchange and sort only — Exchange-free over the bucketed cell
+      // table.
       val ops = EventsAsCdc.opsFromEvents(s, t(s, d, "events"))
       val stamped = TransactionAssembler.assembleBatch(ops).toDF()
       val cells = TimeMachineSink.organize(TimeMachineSink.mutationCells(stamped))

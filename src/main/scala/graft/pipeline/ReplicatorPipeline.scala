@@ -121,18 +121,15 @@ object ReplicatorPipeline {
         cfg.schemaHistoryDir.foreach { hd =>
           cat.historyDf(spark).write.mode("overwrite").parquet(hd)
         }
-        // registry sync for the Kafka path: each table this batch's DDLs
-        // touched re-registers its subject through the compat gate
+        // registry sync for the Kafka path: each schema this batch's DDLs
+        // produced registers through the compat gate in transition order,
+        // so the versions do not depend on where batches split the log
         cfg.schemaRegistryDir.foreach { rd =>
           val reg = new graft.sink.FileSchemaRegistry(rd)
-          cat.transitions.drop(txBefore).map(_.table).distinct
-            .filter(_.nonEmpty).foreach { tbl =>
-              cat.current(tbl).foreach { sch =>
-                reg.registerWithCompatHandling(
-                  graft.sink.AvroPresenter.subject(cat.ownSchema, tbl),
-                  graft.sink.AvroPresenter.avroSchema(sch))
-              }
-            }
+          for (tr <- cat.transitions.drop(txBefore) if tr.table.nonEmpty; sch <- tr.after)
+            reg.registerWithCompatHandling(
+              graft.sink.AvroPresenter.subject(cat.ownSchema, tr.table),
+              graft.sink.AvroPresenter.avroSchema(sch))
         }
       }
     }

@@ -153,20 +153,15 @@ final class OpLogMicroBatchStream(paths: Seq[String], checkpointLocation: String
       } catch { case _: Exception => () } // advisory; see highWater doc
     }
 
-  /** First replica, in configured order, that EXISTS and has caught up to
-    * `atLeast` — a dead primary is never eligible, even for an empty
-    * stream (contract rule; see [[SupplierContract.replicaWith]]). */
-  private def replicaWith(atLeast: Long): Option[String] =
-    supplier.replicaWith(paths, atLeast)
-
   override def initialOffset(): Offset = OpLogOffset(0L)
 
   override def latestOffset(): Offset = {
-    // active replica = first not behind the committed stream position; its
-    // count becomes the new frontier. With every replica behind (all dead /
-    // still catching up) the offset simply stalls — no data loss, and the
-    // stream resumes wherever a replica catches up.
-    val frontier = replicaWith(highWater).map(lineCount).getOrElse(highWater)
+    // active replica = first that EXISTS and is not behind the committed
+    // stream position (a dead primary is never eligible, even for an empty
+    // stream); its count becomes the new frontier. With every replica
+    // behind (all dead / still catching up) the offset simply stalls — no
+    // data loss, and the stream resumes wherever a replica catches up.
+    val frontier = supplier.replicaWith(paths, highWater).map(_._2).getOrElse(highWater)
     if (frontier > highWater) { highWater = frontier; persistFloor() }
     OpLogOffset(highWater)
   }
@@ -180,9 +175,19 @@ final class OpLogMicroBatchStream(paths: Seq[String], checkpointLocation: String
   override def commit(end: Offset): Unit = () // engine offset log is the truth
   override def stop(): Unit = ()
 
+  /** The last plan and its (start, end): the engine plans a batch's range
+    * once per physical plan it builds, several times a micro-batch, and
+    * each plan counts every replica's log. */
+  @volatile private var lastPlan: ((Long, Long), Array[InputPartition]) = ((0L, 0L), Array.empty)
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[OpLogOffset].line
-    val e = end.asInstanceOf[OpLogOffset].line
+    val range = (start.asInstanceOf[OpLogOffset].line, end.asInstanceOf[OpLogOffset].line)
+    val (lastRange, lastParts) = lastPlan
+    if (range == lastRange) lastParts
+    else { val parts = plan(range._1, range._2); lastPlan = (range, parts); parts }
+  }
+
+  private def plan(s: Long, e: Long): Array[InputPartition] =
     if (e <= s) Array.empty
     else {
       // read the committed range from whichever replica can serve it ALL —
@@ -213,7 +218,6 @@ final class OpLogMicroBatchStream(paths: Seq[String], checkpointLocation: String
           Array(OpLogPartition(best, earliest, e))
       }
     }
-  }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val sup = supplier // serialize the binding, not the stream

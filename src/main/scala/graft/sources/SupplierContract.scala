@@ -36,9 +36,10 @@ trait SupplierContract extends Serializable {
   def read(replica: String, from: Long, until: Long): Iterator[String]
 
   /** Derived: first replica, in configured order, that exists and has
-    * caught up to `atLeast` — the failover loop's eligibility rule. */
-  final def replicaWith(replicas: Seq[String], atLeast: Long): Option[String] =
-    replicas.find(r => exists(r) && frontier(r) >= atLeast)
+    * caught up to `atLeast`, with the frontier that qualified it — the
+    * failover loop's eligibility rule. Each replica is counted once. */
+  final def replicaWith(replicas: Seq[String], atLeast: Long): Option[(String, Long)] =
+    replicas.iterator.filter(exists).map(r => r -> frontier(r)).find(_._2 >= atLeast)
 }
 
 /** File binding: a replica is a local append-only log file; the purged
@@ -62,41 +63,64 @@ object FileSupplier extends SupplierContract {
     * the frontier so the next micro-batch picks up the completed event
     * instead of the reader consuming (and permissively skipping) a
     * half-written record. */
-  override def frontier(replica: String): Long = {
-    val f = new java.io.File(replica)
-    if (!f.exists()) 0L
-    else purgedFloor(replica) + {
-      val in = new java.io.BufferedInputStream(new java.io.FileInputStream(f))
-      try {
-        val buf = new Array[Byte](1 << 16)
-        var n = 0L
-        var r = in.read(buf)
-        while (r > 0) {
-          var i = 0
-          while (i < r) { if (buf(i) == '\n') n += 1; i += 1 }
-          r = in.read(buf)
-        }
-        n
-      } finally in.close()
-    }
-  }
+  override def frontier(replica: String): Long =
+    if (!new java.io.File(replica).exists()) 0L
+    else purgedFloor(replica) + { val ls = new Lines(replica); try ls.skip(Long.MaxValue) finally ls.close() }
 
   /** Physical line i holds absolute position `purgedFloor + i`. */
   override def read(replica: String, from: Long, until: Long): Iterator[String] = {
     val purged = purgedFloor(replica)
-    val src = scala.io.Source.fromFile(replica, "UTF-8")
-    new Iterator[String] with AutoCloseable {
-      private val it = src.getLines().zipWithIndex
-        .filter { case (_, i) => i + purged >= from && i + purged < until }
-        .map(_._1)
-      private var open = true
-      override def hasNext: Boolean = {
-        val h = open && it.hasNext
-        if (!h && open) close()
-        h
+    val ls = new Lines(replica, limit = until - math.max(from, purged))
+    ls.skip(from - purged)
+    ls
+  }
+
+  /** A log file's newline-terminated lines, scanned as bytes in 64 KiB
+    * chunks: `skip` passes lines without decoding them, and the iterator
+    * decodes the next `limit` lines strictly as UTF-8, so bytes outside a
+    * read's range are never decoded. A torn tail without its newline is
+    * never a line. Closes itself when exhausted. */
+  private final class Lines(path: String, private var limit: Long = 0L)
+      extends Iterator[String] with AutoCloseable {
+    private val in = new java.io.FileInputStream(path)
+    private val buf = new Array[Byte](1 << 16)
+    private var at, end = 0
+    private val kept = new java.io.ByteArrayOutputStream()
+    private var open = true
+    private var ready = false // `kept` holds the next line
+
+    /** Moves past the next newline, keeping the line's bytes when `keep`;
+      * false when the file ends first. */
+    private def advance(keep: Boolean): Boolean = {
+      kept.reset()
+      var found = false
+      while (!found && (at < end || { end = math.max(in.read(buf), 0); at = 0; end > 0 })) {
+        var i = at
+        while (i < end && buf(i) != '\n') i += 1
+        if (keep) kept.write(buf, at, i - at)
+        found = i < end
+        at = if (found) i + 1 else end
       }
-      override def next(): String = it.next()
-      override def close(): Unit = if (open) { src.close(); open = false }
+      found
     }
+
+    /** Passes up to `n` lines; returns how many there were. */
+    def skip(n: Long): Long = { var k = 0L; while (k < n && advance(keep = false)) k += 1; k }
+
+    override def hasNext: Boolean = {
+      if (!ready && open && limit > 0 && advance(keep = true)) { ready = true; limit -= 1 }
+      if (!ready) close()
+      ready
+    }
+
+    override def next(): String = {
+      if (!hasNext) throw new NoSuchElementException("read past the range")
+      ready = false
+      val b = kept.toByteArray
+      val n = if (b.nonEmpty && b.last == '\r') b.length - 1 else b.length
+      java.nio.charset.StandardCharsets.UTF_8.newDecoder().decode(java.nio.ByteBuffer.wrap(b, 0, n)).toString
+    }
+
+    override def close(): Unit = if (open) { in.close(); open = false }
   }
 }

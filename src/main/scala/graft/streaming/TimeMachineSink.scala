@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The "time machine" sink: every historical cell version of every row is
   * preserved, keyed by (table, row_key, column, cell_ts) — the parquet/
@@ -67,6 +68,17 @@ object TimeMachineSink {
       col("commit_ts_ms") * 1000L - lit(50L) + least(rank.cast("long") - 1L, lit(50L)))
   }
 
+  /** The schema [[write]] lays down: the cell columns in file order, then
+    * the partition columns `batch_id` (null in a sink written without batch
+    * ids) and `table`. The sink reads declare it, so building a read lists
+    * files but infers nothing: no schema-inference job, no footer read on
+    * the driver, a table named `007` stays a string, and an empty sink dir
+    * reads as zero rows. */
+  val SinkSchema: StructType = StructType(
+    Seq("row_key", "column", "value", "txn_uuid").map(StructField(_, StringType)) ++
+      Seq("xxid", "commit_ts_ms", "event_id", "cell_ts", "batch_id").map(StructField(_, LongType)) :+
+      StructField("table", StringType))
+
   /** Append one micro-batch of stamped rows to the time-machine table.
     *
     * Idempotent under micro-batch retries when a batchId is supplied: the
@@ -99,14 +111,6 @@ object TimeMachineSink {
       .filter(col("__v") <= maxVersions).drop("__v")
   }
 
-  /** Read path: latest value of every (table, row_key, column) by
-    * (cell_ts, event_id). max_by aggregates partial map-side (shuffle
-    * carries one row per key-column per input partition, not all versions). */
-  def latestCellsOf(cells: DataFrame): DataFrame =
-    cells.groupBy("table", "row_key", "column")
-      .agg(max_by(col("value"), struct(col("cell_ts"), col("event_id"))).as("value"),
-        max(col("cell_ts")).as("cell_ts"))
-
   /** Latest cell per (table, row_key, column) keeping the winning version's
     * event_id — the snapshot cell format for [[applyIncremental]], where
     * the id must survive so a later merge breaks equal-timestamp ties
@@ -122,8 +126,8 @@ object TimeMachineSink {
   /** Incremental snapshot maintenance: fold one new cell batch into an
     * existing latest-cells snapshot WITHOUT re-reading history — the
     * 100 TB posture for keeping the "now" view fresh (a full
-    * [[latestCellsOf]] recompute re-aggregates the entire version store
-    * every batch; this touches only the keys the batch touches).
+    * [[rowsAsOfCells]] recompute re-reads the entire version store every
+    * batch; this touches only the keys the batch touches).
     *
     *   S' = S[keys ∉ B]  ∪  latest(S[keys ∈ B] ∪ B)
     *
@@ -370,12 +374,12 @@ object TimeMachineSink {
   /** Current rows — the "now" view of the time machine: the as-of read
     * over every version (see [[rowsAsOfCells]]). */
   def latestRows(spark: SparkSession, sinkDir: String): DataFrame =
-    rowsAsOfCells(spark.read.parquet(sinkDir))
+    rowsAsOfCells(spark.read.schema(SinkSchema).parquet(sinkDir))
 
   /** As-of read: state of every row at time `asOfMicros` — the time-machine
     * query the reference's HBase layout answers with timestamped gets. */
   def rowsAsOf(spark: SparkSession, sinkDir: String, asOfMicros: Long): DataFrame =
-    rowsAsOfCells(spark.read.parquet(sinkDir).filter(col("cell_ts") <= asOfMicros))
+    rowsAsOfCells(spark.read.schema(SinkSchema).parquet(sinkDir).filter(col("cell_ts") <= asOfMicros))
 
   /** SCD Type-2 dimension build from the versioned cell store: one interval
     * row per (row_key, version) carrying the FULL row state during
@@ -549,16 +553,29 @@ object TimeMachineSink {
 
   /** As-of read over an already time-filtered cell set (caller applies
     * `cell_ts <= T`, as a literal or a broadcast 1-row threshold join —
-    * either way the predicate reaches the scan). Two keyed aggregations,
-    * both partial map-side: latest surviving version per (table, row_key,
-    * column) by (cell_ts, event_id), then a pivot back to one map-typed row
-    * per key with the row's as-of timestamp; rows whose surviving
-    * row_status is a DELETE marker don't exist at T and are dropped. This
-    * is the general point-in-time reconstruction: run over the bucketed
-    * cell table ([[writeBucketed]]) both aggregations are Exchange-free. */
-  def rowsAsOfCells(liveCells: DataFrame): DataFrame =
-    latestCellsOf(liveCells).groupBy("table", "row_key")
+    * either way the predicate reaches the scan): one map-typed row per
+    * (table, row_key) with each column's latest value by (cell_ts,
+    * event_id) and the row's as-of timestamp; rows whose row_status is a
+    * DELETE marker don't exist at T and are dropped.
+    *
+    * One exchange and one sort: a window over (table, row_key) ordered by
+    * (column, cell_ts desc, event_id desc) keeps each column's first row,
+    * and the pivot inherits its partitioning. Nothing combines map-side,
+    * so the shuffle carries every version of each key's cells (a
+    * per-column max_by combine sorted every map partition and cost more
+    * than it saved at the sizes measured). At scale, read the bucketed
+    * cell table ([[writeBucketed]]): its buckets satisfy the window and
+    * the plan has no exchange. */
+  def rowsAsOfCells(liveCells: DataFrame): DataFrame = {
+    val w = Window.partitionBy("table", "row_key")
+      .orderBy(col("column"), col("cell_ts").desc, col("event_id").desc)
+    liveCells
+      .select(col("table"), col("row_key"), col("column"), col("value"), col("cell_ts"),
+        lag(col("column"), 1).over(w).as("__prev"))
+      .filter(!(col("__prev") <=> col("column")))
+      .groupBy("table", "row_key")
       .agg(map_from_entries(collect_list(struct(col("column"), col("value")))).as("cols"),
         max(col("cell_ts")).as("state_ts"))
       .filter(element_at(col("cols"), "row_status") =!= "D")
+  }
 }

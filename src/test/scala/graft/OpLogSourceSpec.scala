@@ -314,6 +314,43 @@ class OpLogSourceSpec extends SparkTestBase {
       sup.read("primary", 4L, 6L).toVector)
   }
 
+  test("the source counts a replica's log once per latestOffset and once per planned batch") {
+    import graft.sources.{OpLogMicroBatchStream, OpLogOffset, SupplierContract}
+    val lines = (1L to 6L).map(i => OpLogCodec.encode("INSERT", s"t$i", i, i, i * 1000, "t", "k",
+      Map.empty, Map("a" -> s"$i")))
+    val frontierCalls = new java.util.concurrent.atomic.AtomicInteger
+    object Counting extends SupplierContract {
+      override def exists(r: String): Boolean = true
+      override def purgedFloor(r: String): Long = 0L
+      override def frontier(r: String): Long = { frontierCalls.incrementAndGet(); lines.size.toLong }
+      override def read(r: String, from: Long, until: Long): Iterator[String] =
+        lines.slice(from.toInt, until.toInt).iterator
+    }
+    val stream = new OpLogMicroBatchStream(Seq("primary"),
+      Files.createTempDirectory("counting").toString, fallbackPurged = false, Counting)
+    assert(stream.latestOffset() == OpLogOffset(6L))
+    assert(frontierCalls.getAndSet(0) == 1, "latestOffset counted the log more than once")
+    // the engine plans a batch once per physical plan it builds
+    val plans = (1 to 3).map(_ => stream.planInputPartitions(OpLogOffset(0L), OpLogOffset(6L)))
+    assert(plans.map(_.toSeq).distinct.size == 1)
+    assert(frontierCalls.getAndSet(0) == 1, "planning one batch counted the log more than once")
+    stream.planInputPartitions(OpLogOffset(6L), OpLogOffset(6L)) // an empty batch counts nothing
+    stream.planInputPartitions(OpLogOffset(0L), OpLogOffset(3L))
+    assert(frontierCalls.get == 1)
+  }
+
+  test("FileSupplier.read stops at `until`: bytes after the range are never decoded") {
+    val log = Files.createTempDirectory("oplog").resolve("binlog.0001")
+    val lines = (0 until 4).map(i => s"line$i")
+    Files.write(log, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    Files.write(log, Array[Byte](0xC3.toByte, 0x28, '\n'.toByte, 0xFF.toByte, '\n'.toByte),
+      StandardOpenOption.APPEND) // not UTF-8
+    assert(graft.sources.FileSupplier.read(log.toString, 1L, 4L).toVector == lines.drop(1))
+    assert(graft.sources.FileSupplier.frontier(log.toString) == 6L)
+    intercept[java.nio.charset.CharacterCodingException](
+      graft.sources.FileSupplier.read(log.toString, 3L, 5L).toVector)
+  }
+
   test("codec round-trips maps with reserved characters") {
     val line = OpLogCodec.encode("INSERT", "t", 1, 2, 3L, "tbl", "k",
       Map("a&b" -> "v=1\tx"), Map("c" -> "über"))

@@ -254,14 +254,18 @@ class PlanShapeSpec extends SparkTestBase {
       s"snapshot apply must not plan a cross product:\n${p.take(2000)}")
   }
 
-  test("r6: as-of state aggregations partial-aggregate; threshold rides a broadcast") {
+  test("r6: as-of state plans one (table, row_key) exchange; threshold broadcasts") {
     val p = plan("cdc_as_of_state")
     assert(!p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"),
       s"as-of threshold must broadcast, not cartesian:\n${p.take(2000)}")
-    // both read-path groupBys must plan partial aggregation (map-side
-    // combine bounds the shuffle at versions-per-key, not corpus size)
-    assert(p.contains("partial_max_by") || p.contains("HashAggregate"),
-      s"as-of read must partial-aggregate:\n${p.take(2000)}")
+    // the per-column window and the pivot back to rows share one
+    // (table, row_key) partitioning: no second exchange, and no per-column
+    // max_by whose struct ordering forces a sort-based aggregate
+    val keyExchanges =
+      "Exchange hashpartitioning\\(table#\\d+, row_key#\\d+, \\d+\\)".r.findAllIn(p).size
+    assert(keyExchanges == 1, s"as-of read plans $keyExchanges (table, row_key) exchanges:\n${p.take(3000)}")
+    assert(!p.contains("SortAggregate") && !p.contains("partial_max_by"),
+      s"as-of read still aggregates per column:\n${p.take(3000)}")
   }
 
   test("r6: scd2 intervals run every window pass over ONE exchange+sort") {

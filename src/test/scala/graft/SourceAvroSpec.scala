@@ -173,10 +173,15 @@ class SourceAvroSpec extends SparkTestBase {
     ReplicatorPipeline.runBatch(Seq(
       ddlOp("ALTER TABLE t ADD COLUMN note VARCHAR(20)", 2)).toDS(), cfg)
     assert(reg.versions(subject) == Seq(1, 2))
-    // incompatible type flip → subject wiped, re-registered from v1
+    // a DROP and an ADD in one batch register one version each, in log
+    // order: each step alone is compatible, as it is when the two DDLs
+    // arrive in separate batches
     ReplicatorPipeline.runBatch(Seq(
       ddlOp("ALTER TABLE t DROP COLUMN v", 3),
       ddlOp("ALTER TABLE t ADD COLUMN v VARCHAR(10)", 4)).toDS(), cfg)
+    assert(reg.versions(subject) == Seq(1, 2, 3, 4))
+    // incompatible type flip → subject wiped, re-registered from v1
+    ReplicatorPipeline.runBatch(Seq(ddlOp("ALTER TABLE t MODIFY COLUMN v INT", 5)).toDS(), cfg)
     assert(reg.versions(subject) == Seq(1))
   }
 
