@@ -2263,12 +2263,13 @@ object SparkEntry {
       // position 400 and a MODIFY type change (signed INT -> TINYINT
       // UNSIGNED) at position 800. The DDL statements are replayed through
       // SchemaCatalog's parser IN STREAM ORDER (the foreachBatch path,
-      // O(DDL) driver work), and the decoder compiles the resulting
-      // version history into ONE scan-local when-chain: rows before 400
-      // have no `score` key (NULL), rows from 800 re-type the SAME wire
-      // value through the unsigned-tinyint mask. The oracle applies the
-      // two schema regimes explicitly in SQL — so a parse bug, a version
-      // boundary off-by-one, or a wrong per-type decode all hash-mismatch.
+      // O(DDL) driver work), and the pipeline's decoder picks each row's
+      // version from the catalog snapshot in ONE scan-local projection:
+      // rows before 400 have no `score` key (NULL), rows from 800 re-type
+      // the SAME wire value through the unsigned-tinyint mask. The oracle
+      // applies the two schema regimes explicitly in SQL — so a parse bug,
+      // a version boundary off-by-one, or a wrong per-type decode all
+      // hash-mismatch.
       val ev = t(s, d, "events")
       val ddls = Seq(
         (0L, "CREATE TABLE acct (id INT NOT NULL PRIMARY KEY, " +
@@ -2277,8 +2278,8 @@ object SparkEntry {
         (800L, "ALTER TABLE acct MODIFY COLUMN val TINYINT UNSIGNED"))
       val cat = new graft.augment.SchemaCatalog("test")
       ddls.foreach { case (pos, ddl) => cat.applyDdl(ddl, pos) }
-      val versions = cat.versionsOf("acct")
-      require(versions.size == 3, s"expected 3 schema versions, got ${versions.size}")
+      val nVersions = cat.versionsOf("acct").size
+      require(nVersions == 3, s"expected 3 schema versions, got $nVersions")
       // wire images as the supplier delivers them: signed decimal strings;
       // rows written before the ADD COLUMN carry no `score` cell
       val base = map_from_arrays(
@@ -2290,19 +2291,18 @@ object SparkEntry {
         array(((col("event_id") % 100) - 50).cast("string"))))
       // self-cap (see selfCappedQueries): the output `id` IS event_id, so
       // the outputCaps predicate applied HERE — before the decode — prunes
-      // 90% of rows ahead of the versioned when-chain instead of making
+      // 90% of rows ahead of the versioned decode instead of making
       // Catalyst inline the decode into a pushed-down post-filter and
       // evaluate it twice (measured 0.32 -> 1.04 s the generic way)
       val ops = ev.filter(col("event_id") % 10 === 0)
-        .select(col("event_id").as("pos"),
+        .select(lit("acct").as("table"), col("event_id").as("pos"),
+          lit(null).cast("map<string,string>").as("before"),
           when(col("event_id") >= 400, withScore).otherwise(base).as("after"))
-      val dec = ops.withColumn("dec",
-        graft.augment.RowDecoder.decodeVersionedImage(col("after"), col("pos"), versions))
-      dec.select(
-        element_at(col("dec"), "id").cast("bigint").as("id"),
-        element_at(col("dec"), "name").as("name"),
-        element_at(col("dec"), "val").as("val"),
-        element_at(col("dec"), "score").as("score"))
+      graft.augment.RowDecoder.decode(ops, col("pos"), cat).select(
+        element_at(col("after"), "id").cast("bigint").as("id"),
+        element_at(col("after"), "name").as("name"),
+        element_at(col("after"), "val").as("val"),
+        element_at(col("after"), "score").as("score"))
     }),
 
     // ----- MySQL type-decode semantics (SURVEY §1.3) -----
@@ -2327,9 +2327,9 @@ object SparkEntry {
       t(s, d, "events").select(
         col("event_id"),
         MysqlValues.enumDecode(col("event_id") % 5,
-          Seq("animalia", "plantae", "fungi", "bacteria")).as("enum_val"),
+          typedLit(Seq("animalia", "plantae", "fungi", "bacteria"))).as("enum_val"),
         MysqlValues.setDecode(col("event_id") % 16,
-          Seq("read", "write", "exec", "admin")).as("set_val"))),
+          typedLit(Seq("read", "write", "exec", "admin"))).as("set_val"))),
 
     "mysql_datetime_decode" -> ((s, d) =>
       t(s, d, "events").select(

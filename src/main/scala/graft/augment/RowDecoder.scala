@@ -1,6 +1,6 @@
 package graft.augment
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.MysqlValues
@@ -18,129 +18,124 @@ import graft.model.{ColumnSpec, TableSchemaV}
   * SET as bitmask, BIT as integer, BINARY/BLOB as hex, DATETIME/TIMESTAMP
   * as epoch-millis, text/decimal already textual.
   *
-  * Everything is built from codegen'd column expressions; the per-version
-  * decode plan is constructed once per schema version (broadcast with the
-  * catalog), not per row.
+  * The catalog is data, not code: each column is classified once on the
+  * driver into a [[ColumnDecoder]] (a decoder kind and its parameters), the
+  * catalog snapshot rides as one literal, and every row runs the same
+  * `CASE kind` over its version's column list. The expression, and so the
+  * generated code, is the same whatever the number of tables and versions,
+  * and a DDL compiles nothing new. The price is interpretation: `transform`
+  * evaluates its lambda row by row and keeps the decode projection out of
+  * whole-stage codegen.
   */
 object RowDecoder {
 
-  /** Decode one raw column value according to its MySQL type. */
-  def decodeColumn(raw: Column, spec: ColumnSpec): Column = {
+  /** One column's decoder: the column name, the kind that selects its
+    * branch in [[decodeAs]], BINARY(n)'s pad width in bytes, and ENUM/SET
+    * members. */
+  final case class ColumnDecoder(name: String, kind: String, width: Int = 0, members: Seq[String] = Nil)
+
+  /** A table's versions in catalog order: each one's validFromMs and its
+    * column decoders. */
+  private final case class TableVersions(froms: Seq[Long], columns: Seq[Seq[ColumnDecoder]])
+
+  /** Classify one column by its MySQL type. */
+  def kindOf(spec: ColumnSpec): ColumnDecoder = {
     val t = spec.mysqlType.toLowerCase
     val unsigned = t.contains("unsigned")
-    val out: Column =
-      if (t.startsWith("tinyint") && unsigned) MysqlValues.unsignedTiny(raw.cast("long"))
-      else if (t.startsWith("smallint") && unsigned) MysqlValues.unsignedSmall(raw.cast("long"))
-      else if (t.startsWith("mediumint") && unsigned) MysqlValues.unsignedMedium(raw.cast("long"))
-      else if ((t.startsWith("int") || t.startsWith("integer")) && unsigned)
-        MysqlValues.unsignedInt(raw.cast("long"))
-      else if (t.startsWith("bigint") && unsigned) MysqlValues.unsignedBigint(raw.cast("long"))
-      else if (t.startsWith("bit")) MysqlValues.bitString(raw.cast("long"))
-      else if (t.startsWith("enum")) MysqlValues.enumDecode(raw.cast("int"), MysqlValues.parseMembers(spec.mysqlType))
-      else if (t.startsWith("set")) MysqlValues.setDecode(raw.cast("long"), MysqlValues.parseMembers(spec.mysqlType))
-      else if (t.startsWith("binary")) {
-        val declared = "\\d+".r.findFirstIn(t).map(_.toInt).getOrElse(0)
-        if (declared > 0) rpad(upper(raw), declared * 2, "0") else upper(raw)
-      }
-      else if (t.startsWith("varbinary") || t.contains("blob")) upper(raw)
-      else if (t.startsWith("geometry") || t.startsWith("point") || t.startsWith("linestring") ||
-               t.startsWith("polygon") || t.startsWith("multi"))
-        // reference renders the geometry family through its UNKNOWN/hex path
-        // (MysqlTypeDeserializer.java:220-230) — hex parity here; the typed
-        // WKT surface is MysqlValues.geometryWkt
-        upper(raw)
-      else if (t.startsWith("time") && !t.startsWith("timestamp"))
-        MysqlValues.timeString(raw.cast("long"))
-      else if (t.startsWith("year")) MysqlValues.yearValue(raw.cast("int"))
-      else if (t.startsWith("date") && !t.startsWith("datetime"))
-        MysqlValues.dateString(timestamp_millis(raw.cast("long")))
-      else if (t.startsWith("datetime") || t.startsWith("timestamp")) raw // already epoch-ms string
-      else if ((t.startsWith("char") || t.startsWith("varchar") || t.contains("text"))
-               && spec.collation.isDefined)
-        // byte-typed text travels as hex; decode per the column collation
-        // (reference: MysqlTypeDeserializer.java:85-97 latin1 vs utf8)
-        MysqlValues.charsetDecode(unhex(raw), spec.collation.get)
-      else raw // plain text/decimal/float/double: textual passthrough
-    out.cast("string")
-  }
-
-  /** Decode a whole raw image map into a decoded map, per a schema version.
-    * Absent columns decode to NULL entries (binlog_row_image=FULL is the
-    * supplier contract; partial images surface as nulls, not errors). */
-  def decodeImage(imageMap: Column, schema: TableSchemaV): Column = {
-    val names = schema.columns.map(_.name)
-    map_from_arrays(
-      array(names.map(lit): _*),
-      array(schema.columns.map(c => decodeColumn(element_at(imageMap, c.name), c)): _*))
-  }
-
-  /** VERSIONED decode — the schema-evolution read path (reference:
-    * SchemaAtPositionCache / ActiveSchemaManager.java:47-53: every row
-    * image decodes against the schema THAT WAS ACTIVE at its binlog
-    * position, not the current one): given a table's full version history
-    * (ascending validFromMs, from [[SchemaCatalog.versionsOf]]), pick per
-    * row the latest version with validFromMs <= the row's position and
-    * decode the raw image against it. Compiled ONCE into a nested
-    * when-chain over the (driver-tiny) version list — newest checked
-    * first — so a stream spanning N schema versions decodes in a single
-    * narrow scan-local projection, zero shuffles, and a row written before
-    * an ADD COLUMN simply lacks that key in its decoded map (NULL on
-    * extract), while the same wire value re-types across a MODIFY
-    * boundary (e.g. signed passthrough -> unsigned mask).
-    *
-    * A row whose position PRECEDES the earliest catalog version (a catalog
-    * bootstrapped mid-binlog stamps its CREATE at bootstrap position, so
-    * earlier rows exist legitimately) falls back to the raw image — the
-    * same passthrough an unknown table gets in
-    * [[decodeAllTablesVersioned]] — rather than NULLing it out, which
-    * would silently drop the row's data cells downstream. */
-  def decodeVersionedImage(image: Column, posCol: Column,
-                           versions: Seq[TableSchemaV]): Column = {
-    require(versions.nonEmpty, "decodeVersionedImage requires >= 1 schema version")
-    versions.foldLeft(image) { (acc, v) =>
-      when(posCol >= v.validFromMs && image.isNotNull, decodeImage(image, v))
-        .otherwise(acc)
+    def as(kind: String) = ColumnDecoder(spec.name, kind)
+    if (t.startsWith("tinyint") && unsigned) as("utiny")
+    else if (t.startsWith("smallint") && unsigned) as("usmall")
+    else if (t.startsWith("mediumint") && unsigned) as("umedium")
+    else if ((t.startsWith("int") || t.startsWith("integer")) && unsigned) as("uint")
+    else if (t.startsWith("bigint") && unsigned) as("ubigint")
+    else if (t.startsWith("bit")) as("bit")
+    else if (t.startsWith("enum")) as("enum").copy(members = MysqlValues.parseMembers(spec.mysqlType))
+    else if (t.startsWith("set")) as("set").copy(members = MysqlValues.parseMembers(spec.mysqlType))
+    else if (t.startsWith("binary")) {
+      val declared = "\\d+".r.findFirstIn(t).map(_.toInt).getOrElse(0)
+      if (declared > 0) as("binary").copy(width = declared) else as("hex")
     }
+    else if (t.startsWith("varbinary") || t.contains("blob")) as("hex")
+    else if (t.startsWith("geometry") || t.startsWith("point") || t.startsWith("linestring") ||
+             t.startsWith("polygon") || t.startsWith("multi"))
+      // reference renders the geometry family through its UNKNOWN/hex path
+      // (MysqlTypeDeserializer.java:220-230) — hex parity here; the typed
+      // WKT surface is MysqlValues.geometryWkt
+      as("hex")
+    else if (t.startsWith("time") && !t.startsWith("timestamp")) as("time")
+    else if (t.startsWith("year")) as("year")
+    else if (t.startsWith("date") && !t.startsWith("datetime")) as("date")
+    else if ((t.startsWith("char") || t.startsWith("varchar") || t.contains("text"))
+             && spec.collation.isDefined)
+      // byte-typed text travels as hex; decode per the column collation
+      // (reference: MysqlTypeDeserializer.java:85-97 latin1 vs utf8)
+      as(if (spec.collation.get.contains("latin1")) "latin1" else "utf8")
+    else as("raw") // DATETIME/TIMESTAMP (already epoch-ms), text, decimal, float, signed ints
   }
 
-  /** Convenience: decode both images of a stamped-op DataFrame for `table`'s
-    * current schema version. */
-  def decodeStamped(df: org.apache.spark.sql.DataFrame, schema: TableSchemaV): org.apache.spark.sql.DataFrame =
-    df.withColumn("before", when(col("before").isNotNull, decodeImage(col("before"), schema)))
-      .withColumn("after", when(col("after").isNotNull, decodeImage(col("after"), schema)))
-
-  /** Multi-table VERSIONED decode: the [[decodeAllTables]] dispatch crossed
-    * with [[decodeVersionedImage]]'s position resolution — every row of a
-    * mixed-table stream decodes against the schema version of ITS table
-    * that was active at ITS position (the reference's full
-    * DataAugmenter × SchemaAtPositionCache behavior). Still ONE scan-local
-    * when-chain compiled from the (driver-tiny) catalog snapshot: tables ×
-    * versions nested whens, zero shuffles. Unknown tables pass through
-    * undecoded. */
-  def decodeAllTablesVersioned(df: org.apache.spark.sql.DataFrame, posCol: Column,
-      catalog: SchemaCatalog): org.apache.spark.sql.DataFrame = {
-    def dispatch(image: Column): Column =
-      catalog.tables.foldLeft(image) { (acc, tbl) =>
-        val vs = catalog.versionsOf(tbl)
-        if (vs.isEmpty) acc
-        else when(col("table") === tbl && image.isNotNull,
-          decodeVersionedImage(image, posCol, vs)).otherwise(acc)
-      }
-    df.withColumn("before", dispatch(col("before")))
-      .withColumn("after", dispatch(col("after")))
+  /** Decode one raw value by its column's decoder (a struct Column of
+    * [[ColumnDecoder]]'s fields). Each branch is cast to string on its own:
+    * a common CASE type would coerce the passthrough branch to a number. */
+  private def decodeAs(raw: Column, c: Column): Column = {
+    val branches = Seq(
+      "utiny" -> MysqlValues.unsignedTiny(raw.cast("long")),
+      "usmall" -> MysqlValues.unsignedSmall(raw.cast("long")),
+      "umedium" -> MysqlValues.unsignedMedium(raw.cast("long")),
+      "uint" -> MysqlValues.unsignedInt(raw.cast("long")),
+      "ubigint" -> MysqlValues.unsignedBigint(raw.cast("long")),
+      "bit" -> MysqlValues.bitString(raw.cast("long")),
+      "enum" -> MysqlValues.enumDecode(raw.cast("int"), c("members")),
+      "set" -> MysqlValues.setDecode(raw.cast("long"), c("members")),
+      "binary" -> rpad(upper(raw), c("width") * 2, lit("0")),
+      "hex" -> upper(raw),
+      "time" -> MysqlValues.timeString(raw.cast("long")),
+      "year" -> MysqlValues.yearValue(raw.cast("int")),
+      "date" -> MysqlValues.dateString(timestamp_millis(raw.cast("long"))),
+      "latin1" -> MysqlValues.charsetDecode(unhex(raw), "latin1"),
+      "utf8" -> MysqlValues.charsetDecode(unhex(raw), "utf8"))
+    val kind = c("kind")
+    branches.tail.foldLeft(when(kind === branches.head._1, branches.head._2.cast("string"))) {
+      case (acc, (k, v)) => acc.when(kind === k, v.cast("string"))
+    }.otherwise(raw)
   }
 
-  /** Multi-table decode: dispatch on the `table` column across every current
-    * schema in the catalog — a when-chain built once from the (small,
-    * broadcastable) catalog snapshot, so a mixed-table stream decodes in a
-    * single narrow projection. Unknown tables pass through undecoded. */
-  def decodeAllTables(df: org.apache.spark.sql.DataFrame, catalog: SchemaCatalog): org.apache.spark.sql.DataFrame = {
-    val schemas = catalog.tables.flatMap(catalog.current)
-    def dispatch(image: Column): Column =
-      schemas.foldLeft(image) { (acc, sch) =>
-        when(col("table") === sch.table && image.isNotNull, decodeImage(image, sch)).otherwise(acc)
-      }
-    df.withColumn("before", dispatch(col("before")))
-      .withColumn("after", dispatch(col("after")))
+  /** Decode an image map by an array of column decoders. Absent columns
+    * decode to NULL entries (binlog_row_image=FULL is the supplier contract;
+    * partial images surface as nulls, not errors). */
+  private def decodeWith(image: Column, columns: Column): Column =
+    map_from_entries(transform(columns, c =>
+      struct(c("name"), decodeAs(element_at(image, c("name")), c))))
+
+  /** Decode a whole raw image map into a decoded map, per one schema version. */
+  def decodeImage(image: Column, schema: TableSchemaV): Column =
+    decodeWith(image, typedLit(schema.columns.map(kindOf)))
+
+  /** Decode `before` and `after` of every row of a mixed-table stream
+    * against the version of ITS table that was active at ITS position
+    * (reference: DataAugmenter × SchemaAtPositionCache /
+    * ActiveSchemaManager.java:47-53). The version is the last one, in
+    * catalog order, whose validFromMs is <= `pos` — the same one as
+    * [[SchemaCatalog.at]] — so a row at exactly a DDL's position sees the
+    * post-DDL schema, a row written before an ADD COLUMN lacks that key, and
+    * the same wire value re-types across a MODIFY boundary.
+    *
+    * A row of an unknown table, or one that precedes its table's first
+    * version (a catalog bootstrapped mid-binlog stamps its CREATE at the
+    * bootstrap position), keeps its raw image rather than being NULLed,
+    * which would drop the row's cells downstream. One narrow projection, no
+    * shuffle. */
+  def decode(df: DataFrame, pos: Column, catalog: SchemaCatalog): DataFrame = {
+    val snapshot = typedLit(catalog.tables.map { t =>
+      val vs = catalog.versionsOf(t)
+      t -> TableVersions(vs.map(_.validFromMs), vs.map(_.columns.map(kindOf)))
+    }.toMap)
+    val table = element_at(snapshot, col("table"))
+    // 1-based index of the active version, 0 before the first one
+    val idx = array_max(transform(table("froms"), (from, i) => when(from <= pos, i + 1).otherwise(0)))
+    def decoded(image: Column): Column =
+      when(idx > 0 && image.isNotNull, decodeWith(image, element_at(table("columns"), idx)))
+        .otherwise(image)
+    df.withColumn("before", decoded(col("before")))
+      .withColumn("after", decoded(col("after")))
   }
 }

@@ -12,8 +12,8 @@ import scala.collection.mutable
   * version valid from the event position onward.
   *
   * Updated sequentially inside foreachBatch (DDL order = binlog order); the
-  * catalog snapshot broadcast to executors is an ordinary small Map — the
-  * broadcast-hash-join side of every schema lookup.
+  * decoder ships a snapshot of it to executors as one literal inside the
+  * batch's plan.
   */
 /** One DDL transition: schema before and after, plus the statement —
   * mirrors SchemaTransitionSequence (reference:
@@ -31,9 +31,10 @@ final class SchemaCatalog(val ownSchema: String) {
   def at(table: String, tsMs: Long): Option[TableSchemaV] =
     versions.get(table.toLowerCase).flatMap(_.find(_.validFromMs <= tsMs))
 
-  /** ALL versions of a table in ascending validFromMs order — the input the
-    * versioned stream decoder ([[RowDecoder.decodeVersionedImage]]) compiles
-    * into its per-row version dispatch. O(versions), driver-tiny. */
+  /** ALL versions of a table in the order they were installed (ascending
+    * validFromMs when DDL arrives in position order) — the versioned
+    * decoder ([[RowDecoder.decode]]) carries them as data and picks, per
+    * row, the last one valid at the row's position. */
   def versionsOf(table: String): Seq[TableSchemaV] =
     versions.getOrElse(norm(table), Nil).reverse
 

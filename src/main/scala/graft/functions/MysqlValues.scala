@@ -57,39 +57,28 @@ object MysqlValues {
 
   /** Parse the member list out of an `enum('a','b')` / `set('a','b')` column
     * type string (reference: AugmenterContext.java:78-79,934-955 — the
-    * per-batch member cache; here members land in the schema catalog once,
-    * broadcast with it). */
+    * per-batch member cache; here members are parsed once per schema
+    * version and ride in the decoder's catalog literal). */
   def parseMembers(columnType: String): Seq[String] = {
     val m = "(?i)^(?:enum|set)\\s*\\((.*)\\)".r.findFirstMatchIn(columnType.trim)
     m.map(_.group(1).split(",").toSeq.map(_.trim.stripPrefix("'").stripSuffix("'"))).getOrElse(Nil)
   }
 
-  /** ENUM decode straight from the column type string. */
-  def enumDecodeFromType(idx: Column, columnType: String): Column =
-    enumDecode(idx, parseMembers(columnType))
+  /** ENUM: 1-based index into the member list (an `array<string>` Column);
+    * index 0 → NULL (reference: MysqlTypeDeserializer.java:144-152, members
+    * parsed at AugmenterContext.java:934-955). `element_at` is 1-based like
+    * MySQL. A NULL index never reaches `element_at`: its generated code
+    * reads a NULL index as -1, the last member. */
+  def enumDecode(idx: Column, members: Column): Column =
+    when(idx > 0 && idx <= size(members), element_at(members, idx.cast("int")))
 
-  /** SET decode straight from the column type string. */
-  def setDecodeFromType(mask: Column, columnType: String): Column =
-    setDecode(mask, parseMembers(columnType))
-
-  /** ENUM: 1-based index into the parsed member list; index 0 → NULL
-    * (reference: MysqlTypeDeserializer.java:144-152, members parsed at
-    * AugmenterContext.java:934-955). `element_at` is 1-based like MySQL. */
-  def enumDecode(idx: Column, members: Seq[String]): Column = {
-    val arr = array(members.map(lit): _*)
-    when(idx <= 0 || idx > members.size, lit(null).cast("string"))
-      .otherwise(element_at(arr, idx.cast("int")))
-  }
-
-  /** SET: bitmask → comma-joined member names, 0 → NULL
-    * (reference: MysqlTypeDeserializer.java:154-170). Built from per-bit
-    * `when` branches + `concat_ws`, which skips NULLs — fully codegen'd. */
-  def setDecode(mask: Column, members: Seq[String]): Column = {
-    val parts = members.zipWithIndex.map { case (m, i) =>
-      when(mask.bitwiseAND(lit(1L << i)) =!= 0, lit(m)).otherwise(lit(null).cast("string"))
-    }
-    nullif(concat_ws(",", parts: _*), lit(""))
-  }
+  /** SET: bitmask → comma-joined names of the members (an `array<string>`
+    * Column) whose bit is set, 0 → NULL (reference:
+    * MysqlTypeDeserializer.java:154-170). `array_join` skips the NULLs of
+    * the unset bits; the `transform` over the members runs interpreted
+    * inside the generated code. */
+  def setDecode(mask: Column, members: Column): Column =
+    nullif(array_join(transform(members, (m, i) => when(getbit(mask, i) === 1, m)), ","), lit(""))
 
   /** DATETIME/TIMESTAMP normalized to a UTC epoch-millis string
     * (reference: MysqlTypeDeserializer.java:131-142). */
@@ -119,9 +108,6 @@ object MysqlValues {
     when(c >= 0 && c <= 69, c + 2000)
       .when(c >= 70 && c <= 99, c + 1900)
       .otherwise(c)
-
-  /** DECIMAL rendered as plain string (reference: MysqlTypeDeserializer.java:215-218). */
-  def decimalPlainString(c: Column): Column = c.cast("string")
 
   /** JSON columns arrive from a row-based binlog in MySQL's binary JSON
     * storage format; decode to a JSON string (reference:

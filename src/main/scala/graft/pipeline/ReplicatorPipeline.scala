@@ -42,12 +42,11 @@ final case class PipelineConfig(
     schemaRegistryDir: Option[String] = None,
     /** Decode row images through the versioned catalog BEFORE the sink —
       * the reference's DataAugmenter order (cells land decoded, each row
-      * against the schema version active at its position:
-      * [[graft.augment.RowDecoder.decodeAllTablesVersioned]]). Requires
-      * `schemaCatalog`. Off by default: the raw-cell sink is the
-      * time-machine's storage contract and decode stays available on the
-      * read side; turn on when downstream consumers read the sink
-      * directly. */
+      * against the schema version of its table active at its commitTsMs:
+      * [[graft.augment.RowDecoder.decode]]). Requires `schemaCatalog`.
+      * Off by default: the raw-cell sink is the time-machine's storage
+      * contract and decode stays available on the read side; turn on when
+      * downstream consumers read the sink directly. */
     decodeWithCatalog: Boolean = false
 ) {
   require(!decodeWithCatalog || schemaCatalog.isDefined, "decodeWithCatalog requires a schemaCatalog")
@@ -135,11 +134,10 @@ object ReplicatorPipeline {
     }
     val routed0 = route(batch.filter(col("kind") =!= "DDL").toDF(), cfg)
     // versioned decode AFTER the catalog absorbed this batch's DDL (rows
-    // that precede an in-batch barrier still resolve to the older version
-    // by position — the when-chain keys on commitTsMs, not batch order)
+    // that precede an in-batch barrier still resolve to the older version:
+    // the version is picked by commitTsMs, not by batch order)
     val routed =
-      if (cfg.decodeWithCatalog)
-        graft.augment.RowDecoder.decodeAllTablesVersioned(routed0, col("commitTsMs"), cfg.schemaCatalog.get)
+      if (cfg.decodeWithCatalog) graft.augment.RowDecoder.decode(routed0, col("commitTsMs"), cfg.schemaCatalog.get)
       else routed0
     val df = cfg.payloadTable match {
       case Some(p) => routed.withColumn("rowKey",

@@ -42,11 +42,11 @@ class MysqlValuesSpec extends SparkTestBase {
   }
 
   test("ENUM decodes 1-based, 0 -> null; SET decodes bitmask, 0 -> null") {
-    val members = Seq("animalia", "plantae")
+    val members = typedLit(Seq("animalia", "plantae"))
     assert(one(MysqlValues.enumDecode(lit(1), members)) == "animalia")
     assert(one(MysqlValues.enumDecode(lit(2), members)) == "plantae")
     assert(one(MysqlValues.enumDecode(lit(0), members)) == null)
-    val set = Seq("a", "b", "c", "d")
+    val set = typedLit(Seq("a", "b", "c", "d"))
     assert(one(MysqlValues.setDecode(lit(5L), set)) == "a,c")
     assert(one(MysqlValues.setDecode(lit(15L), set)) == "a,b,c,d")
     assert(one(MysqlValues.setDecode(lit(0L), set)) == null)
@@ -86,10 +86,6 @@ class MysqlValuesSpec extends SparkTestBase {
     assert(one(MysqlValues.yearValue(lit(69))) == 2069)
     assert(one(MysqlValues.yearValue(lit(70))) == 1970)
     assert(one(MysqlValues.yearValue(lit(2024))) == 2024)
-  }
-
-  test("decimal plain string") {
-    assert(one(MysqlValues.decimalPlainString(lit(BigDecimal("100.000000000")))) == "100.000000000")
   }
 
   // --- MySQL binary JSON (reference: MysqlTypeDeserializer.java:99-109) ---

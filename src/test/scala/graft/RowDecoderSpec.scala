@@ -72,12 +72,17 @@ class RowDecoderSpec extends SparkTestBase {
       Op("INSERT", "t1", 1, 2, 1000L, "organisms", "2", Map.empty, rawRow),
       Op("COMMIT", "t1", 1, 3, 2000L, "organisms", "2", Map.empty, Map.empty)).toDS()
     val stamped = graft.streaming.TransactionAssembler.assemble(ops).toDF()
-    TimeMachineSink.write(RowDecoder.decodeStamped(stamped, schema), sink)
+    TimeMachineSink.write(RowDecoder.decode(stamped, col("commitTsMs"), cat), sink)
     val row = TimeMachineSink.latestRows(spark, sink).collect()(0)
     val cols = row.getAs[Map[String, String]]("cols")
     assert(cols("lifespan") == "240" && cols("kingdom") == "animalia")
     assert(cols("row_status") == "I")
   }
+
+  /** `acct` row images at their positions, in the decoder's input shape. */
+  private def acctRows(rows: (Long, Map[String, String])*) =
+    rows.toDF("pos", "after").select(lit("acct").as("table"), col("pos"),
+      lit(null).cast("map<string,string>").as("before"), col("after"))
 
   test("versioned decode: each row decodes against the schema active at its position") {
     // the A10 unit pin under the gated cdc_schema_evolution row: version
@@ -92,16 +97,14 @@ class RowDecoderSpec extends SparkTestBase {
     cat.applyDdl("ALTER TABLE acct MODIFY COLUMN val TINYINT UNSIGNED", 800L)
     val versions = cat.versionsOf("acct")
     assert(versions.map(_.version) == Seq(0, 1, 2))
-    val rows = Seq(
+    val rows = acctRows(
       (399L, Map("id" -> "1", "val" -> "-37")),
       (400L, Map("id" -> "2", "val" -> "-37", "score" -> "-1")),
       (799L, Map("id" -> "3", "val" -> "-37", "score" -> "7")),
       (800L, Map("id" -> "4", "val" -> "-37", "score" -> "7")))
-      .toDF("pos", "after")
-    val dec = rows.select(col("pos"),
-        RowDecoder.decodeVersionedImage(col("after"), col("pos"), versions).as("d"))
-      .select(col("pos"), element_at(col("d"), "val").as("val"),
-        element_at(col("d"), "score").as("score"))
+    val dec = RowDecoder.decode(rows, col("pos"), cat)
+      .select(col("pos"), element_at(col("after"), "val").as("val"),
+        element_at(col("after"), "score").as("score"))
       .as[(Long, String, String)].collect().map { case (p, v, s) => p -> ((v, s)) }.toMap
     assert(dec(399L) == (("-37", null)))   // v0: signed passthrough, no score key
     assert(dec(400L) == (("-37", "65535"))) // v1 from its own position, inclusive
@@ -113,17 +116,14 @@ class RowDecoderSpec extends SparkTestBase {
     // a catalog bootstrapped mid-binlog stamps its CREATE at the bootstrap
     // position; rows earlier than that must NOT be NULLed (silent data
     // loss) — they fall back to the raw image exactly like an
-    // unknown-table row in decodeAllTablesVersioned
+    // unknown-table row
     val cat = new SchemaCatalog("test")
     cat.applyDdl("CREATE TABLE acct (id INT NOT NULL PRIMARY KEY, val TINYINT UNSIGNED)", 500L)
-    val versions = cat.versionsOf("acct")
-    val rows = Seq(
+    val rows = acctRows(
       (100L, Map("id" -> "1", "val" -> "-37")),  // pre-bootstrap: raw passthrough
       (500L, Map("id" -> "2", "val" -> "-37")))  // at/after: decoded (unsigned mask)
-      .toDF("pos", "after")
-    val dec = rows.select(col("pos"),
-        RowDecoder.decodeVersionedImage(col("after"), col("pos"), versions).as("d"))
-      .select(col("pos"), element_at(col("d"), "val").as("val"))
+    val dec = RowDecoder.decode(rows, col("pos"), cat)
+      .select(col("pos"), element_at(col("after"), "val").as("val"))
       .as[(Long, String)].collect().toMap
     assert(dec(100L) == "-37")  // untouched wire value, not NULL
     assert(dec(500L) == "219")
@@ -175,7 +175,7 @@ class RowDecoderSpec extends SparkTestBase {
       ("b", Map("id" -> "2", "kind" -> "2")),
       ("unknown", Map("raw" -> "7"))
     ).toDF("table", "after").withColumn("before", lit(null).cast("map<string,string>"))
-    val out = RowDecoder.decodeAllTables(df, cat2)
+    val out = RowDecoder.decode(df, lit(2L), cat2)
       .select(col("table"), col("after")).as[(String, Map[String, String])].collect().toMap
     assert(out("a")("flags") == "10101010")
     assert(out("b")("kind") == "y")

@@ -55,7 +55,7 @@ class SourceAvroSpec extends SparkTestBase {
     assert(MysqlValues.parseMembers("set('a','b','c')") == Seq("a", "b", "c"))
     assert(MysqlValues.parseMembers("int(11)") == Nil)
     val v = Seq(2).toDF("i")
-      .select(MysqlValues.enumDecodeFromType(col("i"), "enum('animalia','plantae')"))
+      .select(MysqlValues.enumDecode(col("i"), typedLit(MysqlValues.parseMembers("enum('animalia','plantae')"))))
       .collect()(0).getString(0)
     assert(v == "plantae")
   }
@@ -124,7 +124,7 @@ class SourceAvroSpec extends SparkTestBase {
       Op("COMMIT", "b1", 1, 2, 200L, "nation", "1", Map.empty, Map.empty)).toDS()
     val stamped = ReplicatorPipeline.transform(ops,
       PipelineConfig("/tmp/na", "/tmp/nb")).toDF()
-    val decoded = RowDecoder.decodeStamped(stamped, sch)
+    val decoded = RowDecoder.decode(stamped, col("commitTsMs"), cat)
       .filter(col("kind") === "INSERT")
       .select(element_at(col("after"), "n_name")).as[String].collect()
     assert(decoded.toSeq == Seq("FRANCE"))
