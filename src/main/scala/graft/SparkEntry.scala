@@ -2242,9 +2242,10 @@ object SparkEntry {
     "cdc_raw_adapter" -> ((s, d) => {
       // the raw binlog event layer end-to-end (reference RawEventType.java:
       // 4-43): events synthesized as serialized GTID/TABLE_MAP/ROWS/XID
-      // blocks, normalized by RawBinlogAdapter (as-of table-map resolution,
-      // windowed gtid context), then transaction-assembled — must re-derive
-      // exactly the per-event facts SQL computes directly on `events`.
+      // blocks, normalized by RawBinlogAdapter (the per-server supplier
+      // state machine over the binlog-ordered log), then
+      // transaction-assembled — must re-derive exactly the per-event facts
+      // SQL computes directly on `events`.
       val raw = EventsAsCdc.rawFromEvents(s, t(s, d, "events"))
       val ops = graft.operators.RawBinlogAdapter.toOps(raw)
       TransactionAssembler.assembleBatch(ops).toDF()

@@ -1,15 +1,9 @@
 package graft.augment
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Classification of QUERY-event SQL text into the transaction/DDL classes
   * the augmenter dispatches on (reference semantics:
   * AugmenterContext.java:415-577, default patterns :71-81). Patterns allow a
   * leading /*...*/ comment like MySQL's binlog writes.
-  *
-  * Exposed both as a pure function (driver-side schema handling) and as a
-  * column expression (stream classification stays in codegen).
   */
 object DdlClassifier {
 
@@ -52,36 +46,17 @@ object DdlClassifier {
     else Other
   }
 
-  /** Column form for stream-side classification (stays in codegen). */
-  def classifyCol(sql: Column): Column = {
-    def m(re: scala.util.matching.Regex) = sql.rlike(re.pattern.pattern())
-    when(m(beginRe), Begin.name)
-      .when(m(commitRe), Commit.name)
-      .when(m(xaCommitRe), XaCommit.name)
-      .when(m(xaRollbackRe), XaRollback.name)
-      .when(m(definerRe), DdlDefiner.name)
-      .when(m(tempTableRe), DdlTemporaryTable.name)
-      .when(m(viewRe), DdlView.name)
-      .when(m(analyzeRe), DdlAnalyze.name)
-      .when(m(tableRe), DdlTable.name)
-      .otherwise(Other.name)
-  }
-
   /** The xid of an XA COMMIT / XA ROLLBACK statement, canonicalized for
     * matching against an XA_PREPARE event's xid (quotes, backticks and
     * whitespace stripped; a trailing ONE PHASE removed): MySQL renders the
     * xid as 'gtrid'[,'bqual'[,formatID]] in the statement text while the
     * prepare event carries the raw id — both normalize to the same token. */
   def xaXid(sql: String): String =
-    sql.replaceAll("(?i)^\\s*(?:/\\*.*?\\*/\\s*)?xa\\s+(?:commit|rollback)\\s+", "")
-      .replaceAll("(?i)\\s+one\\s+phase\\s*$", "")
-      .replaceAll("['`\"\\s]", "")
+    normXid(sql.replaceAll("(?i)^\\s*(?:/\\*.*?\\*/\\s*)?xa\\s+(?:commit|rollback)\\s+", "")
+      .replaceAll("(?i)\\s+one\\s+phase\\s*$", ""))
 
-  /** Column form of [[xaXid]]. */
-  def xaXidCol(sql: Column): Column =
-    regexp_replace(regexp_replace(regexp_replace(sql,
-      "(?i)^\\s*(?:/\\*.*?\\*/\\s*)?xa\\s+(?:commit|rollback)\\s+", ""),
-      "(?i)\\s+one\\s+phase\\s*$", ""), "['`\"\\s]", "")
+  /** An xid with quotes, backticks and whitespace stripped. */
+  def normXid(xid: String): String = xid.replaceAll("['`\"\\s]", "")
 
   /** Strip the source schema qualifier from DDL so it can replay against the
     * engine catalog (reference: ActiveSchemaHelpers.rewriteActiveSchemaName,

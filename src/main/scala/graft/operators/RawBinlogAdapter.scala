@@ -1,12 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.augment.DdlClassifier
 import graft.model.{RawEvent, RawEventType => RT}
-import graft.streaming.Op
+import graft.streaming.{Op, TransactionAssembler}
 
 /** Normalizes the raw binlog event layer into the engine's [[Op]] stream —
   * the Spark analog of the reference's supplier→augmenter edge
@@ -15,18 +15,14 @@ import graft.streaming.Op
   *
   * The reference walks the binlog single-threaded, holding mutable supplier
   * state: the current GTID (set by a GTID event, read by everything until
-  * the next one), the pending ROWS_QUERY text (attached to the following
-  * rows events), and a tableId → TABLE_MAP cache. The declarative analog:
-  *  - GTID / ROWS_QUERY context = a running `last(ignoreNulls)` window over
-  *    the binlog order (serverId partition, file+position order). A binlog
-  *    is inherently sequential PER SERVER, so serverId is the right — and
-  *    only — partition key; multi-source replication scales out across
-  *    servers exactly like the reference runs one supplier per source.
-  *  - TABLE_MAP resolution = an as-of join (tableId key, position time):
-  *    each rows event takes the latest preceding map for its table id,
-  *    which is the binlog contract (MySQL re-emits TABLE_MAP before each
-  *    rows-event group). Reuses [[TemporalJoins.asOfJoin]] — one shuffle
-  *    on tableId, no per-event cache.
+  * the next one), a tableId → TABLE_MAP cache and the XA branches parked
+  * until their decision. Here that walk is one transition, [[step]], over
+  * an explicit [[SupplierState]], driven per server in binlog order. A
+  * binlog is inherently sequential PER SERVER, so serverId is the right —
+  * and only — grouping key; multi-source replication scales out across
+  * servers exactly like the reference runs one supplier per source.
+  * [[toOps]] walks a bounded log from an empty state; [[toOpsStreaming]]
+  * carries the state across micro-batches.
   *
   * Dispatch parity: QUERY classifies via [[DdlClassifier]] (BEGIN / COMMIT
   * / XA COMMIT / XA ROLLBACK / DDL classes / OTHER-dropped); XID commits
@@ -48,8 +44,8 @@ object RawBinlogAdapter {
     * position in the low 40 (positions are bounded by the 1 GB-ish
     * max_binlog_size, far under 2^40). Positions RESET on rotation, so bare
     * position comparisons are wrong the moment a log spans files — every
-    * ordering in this adapter (context windows, as-of table-map resolution,
-    * streaming sort) goes through this ordinal, and it IS `Op.eventId`, so
+    * ordering in this adapter (the bounded per-server sort, the streaming
+    * sort) goes through this ordinal, and it IS `Op.eventId`, so
     * downstream consumers that order by event id (DDL replay in
     * ReplicatorPipeline.writeBatch, version tie-breaks in TimeMachineSink)
     * inherit the cross-file total order.
@@ -68,156 +64,26 @@ object RawBinlogAdapter {
     (least(coalesce(regexp_extract(file, "(\\d+)$", 1).cast("long"), lit(0L)),
       lit(MaxFileSeq)) * lit(1L << 40)) + position
 
+  private val fileSeqRe = "(\\d+)$".r
+
   private def ordinalOf(e: RawEvent): Long = {
-    val m = "(\\d+)$".r.findFirstIn(e.file)
-    val seq = m.flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(0L)
+    val seq = fileSeqRe.findFirstIn(e.file)
+      .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(0L)
     math.min(seq, MaxFileSeq) * (1L << 40) + e.position
   }
 
-  /** Raw events with supplier context attached (current gtid / pending
-    * rows-query), still one row per raw event. Both context fills share one
-    * window spec → a single Window pass. */
-  def withContext(raw: Dataset[RawEvent]): DataFrame = {
-    val w = Window.partitionBy(col("serverId"))
-      .orderBy(binlogOrdinal(col("file"), col("position")))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    raw.toDF()
-      .withColumn("curGtid",
-        last(when(col("code") === RT.GTID, col("gtid")), ignoreNulls = true).over(w))
-      .withColumn("curRowsQuery",
-        last(when(col("code") === RT.ROWS_QUERY, col("sql")), ignoreNulls = true).over(w))
-  }
-
-  /** Full normalization: raw events → the engine's op stream, ready for
-    * [[graft.streaming.TransactionAssembler]]. */
-  def toOps(raw: Dataset[RawEvent]): Dataset[Op] = {
-    implicit val opEnc = Encoders.product[Op]
-    // the contexted stream feeds FIVE consumers (row/query/begin/commit
-    // branches + the table-map build side); persist it so the upstream
-    // source and the context windows execute once, not per branch (at
-    // 100 TB this persist is a checkpoint of one micro-batch's events)
-    val ctx = withContext(raw)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val txnId = coalesce(col("curGtid"), concat(lit("pos:"), col("position")))
-    val emptyMap = typedLit(Map.empty[String, String])
-
-    // --- rows events: resolve TABLE_MAP as-of, explode row images ---
-    val rowEvents = ctx.filter(col("code").isin(seqAny(RT.rowCodes): _*))
-    val tableMaps = ctx.filter(col("code") === RT.TABLE_MAP)
-    val resolved = TemporalJoins.asOfJoin(
-      rowEvents, col("tableId"), binlogOrdinal(col("file"), col("position")),
-      tableMaps, tableMaps("tableId"),
-      binlogOrdinal(tableMaps("file"), tableMaps("position")),
-      Seq("mapDb" -> tableMaps("db"), "mapTable" -> tableMaps("table"),
-        "mapPks" -> tableMaps("pkColumns")))
-    val kind = when(col("code").isin(seqAny(RT.writeRowCodes): _*), "INSERT")
-      .when(col("code").isin(seqAny(RT.updateRowCodes): _*), "UPDATE")
-      .otherwise("DELETE")
-    val rowOps = resolved
-      .withColumn("row", explode(col("rows")))
-      .select(
-        kind.as("kind"), txnId.as("txnId"), lit(0L).as("xxid"),
-        binlogOrdinal(col("file"), col("position")).as("eventId"), col("tsMs"),
-        col("mapTable").as("table"),
-        array_join(transform(col("mapPks"),
-          c => coalesce(element_at(col("row.after"), c),
-            element_at(col("row.before"), c))), ";").as("rowKey"),
-        coalesce(col("row.before"), emptyMap).as("before"),
-        coalesce(col("row.after"), emptyMap).as("after"))
-
-    // --- QUERY events: BEGIN / COMMIT / DDL via the classifier (XA
-    // decisions are handled by the two-phase block below, not here) ---
-    val cls = DdlClassifier.classifyCol(col("sql"))
-    val queryOps = ctx.filter(col("code") === RT.QUERY)
-      .withColumn("cls", cls)
-      .filter(col("cls") =!= DdlClassifier.Other.name &&
-        !col("cls").isin(DdlClassifier.XaCommit.name, DdlClassifier.XaRollback.name))
-      .select(
-        when(col("cls").startsWith("DDL"), "DDL").otherwise(col("cls")).as("kind"),
-        txnId.as("txnId"), lit(0L).as("xxid"),
-        binlogOrdinal(col("file"), col("position")).as("eventId"), col("tsMs"),
-        // DDL target table (best-effort parse; catalog replay re-parses the
-        // full statement — reference rewrites+replays the raw SQL too)
-        coalesce(regexp_extract(col("sql"),
-          "(?i)table\\s+`?([A-Za-z0-9_]+)`?", 1), lit("")).as("table"),
-        lit("").as("rowKey"),
-        emptyMap.as("before"),
-        when(col("cls").startsWith("DDL"), map(lit("ddl"), col("sql")))
-          .otherwise(emptyMap).as("after"))
-
-    // --- transaction boundaries: GTID begins, XID commits ---
-    val beginOps = ctx.filter(col("code") === RT.GTID)
-      .select(lit("BEGIN").as("kind"), col("gtid").as("txnId"), lit(0L).as("xxid"),
-        binlogOrdinal(col("file"), col("position")).as("eventId"), col("tsMs"),
-        lit("").as("table"), lit("").as("rowKey"),
-        emptyMap.as("before"), emptyMap.as("after"))
-    val commitOps = ctx.filter(col("code") === RT.XID)
-      .select(lit("COMMIT").as("kind"), txnId.as("txnId"),
-        coalesce(col("xid"), lit(0L)).as("xxid"),
-        binlogOrdinal(col("file"), col("position")).as("eventId"), col("tsMs"),
-        lit("").as("table"), lit("").as("rowKey"),
-        emptyMap.as("before"), emptyMap.as("after"))
-
-    // --- XA two-phase: XA_PREPARE only PARKS the branch (no commit op —
-    // a prepared branch may still be XA ROLLBACKed; committing at prepare
-    // position would replicate phantom rows). The decision arrives later as
-    // an XA COMMIT / XA ROLLBACK QUERY in its OWN transaction, linked by
-    // the xid text: the first decision after the prepare commits the
-    // BRANCH's txnId at the decision position, a rollback (or no decision
-    // yet) leaves the branch uncommitted and the assembler's commit gate
-    // discards its rows.
-    //
-    // XA events are rare — MOST batches carry none — so the two resolution
-    // joins are gated on a presence probe first against a conservative
-    // SUPERSET predicate (any XA_PREPARE event, or any QUERY whose text
-    // opens with XA — covers COMMIT/ROLLBACK/ONE PHASE spellings plus
-    // harmless START/END noise). If the probe finds nothing, both legs are
-    // provably empty and the plan skips their joins entirely. The probe is
-    // ONE aggregate job over the persisted contexted stream — which the
-    // main query consumes five ways regardless — so the probe job IS the
-    // cache materialization the pipeline pays anyway, and its marginal cost
-    // is a thin max() over cached rows. Not `isEmpty`: the take(1) limit
-    // ladder launches a job per partition-batch exactly when the answer is
-    // "empty", which is the common case this gate exists for. ---
-    val hasXa = ctx
-      .select(max(when(col("code") === RT.XA_PREPARE ||
-        (col("code") === RT.QUERY && col("sql").rlike("(?i)^\\s*XA\\b")), 1)
-        .otherwise(0)).as("x"))
-      .first().getInt(0) == 1
-    def normXid(c: Column): Column = regexp_replace(c, "['`\"\\s]", "")
-    val xaPrep = ctx.filter(col("code") === RT.XA_PREPARE)
-      .select(txnId.as("braTxn"), normXid(col("xaId")).as("braXid"),
-        binlogOrdinal(col("file"), col("position")).as("braOrd"))
-    val xaDec = ctx.filter(col("code") === RT.QUERY)
-      .withColumn("cls", cls)
-      .filter(col("cls").isin(DdlClassifier.XaCommit.name, DdlClassifier.XaRollback.name))
-      .select(col("cls").as("decCls"), normXid(DdlClassifier.xaXidCol(col("sql"))).as("decXid"),
-        binlogOrdinal(col("file"), col("position")).as("decOrd"),
-        col("tsMs").as("decTs"), txnId.as("decTxn"))
-    val xaCommitOps = xaPrep
-      .join(xaDec, col("braXid") === col("decXid") && col("decOrd") > col("braOrd"), "left")
-      .groupBy(col("braTxn"), col("braOrd"))
-      // min(struct) = FIRST decision after the prepare; unmatched rows fold
-      // to NULL so min ignores them (xid reuse starts a new prepare cycle)
-      .agg(min(when(col("decCls").isNotNull,
-        struct(col("decOrd"), col("decCls"), col("decTs")))).as("d"))
-      .filter(col("d").isNotNull && col("d.decCls") === DdlClassifier.XaCommit.name)
-      .select(lit("COMMIT").as("kind"), col("braTxn").as("txnId"), lit(0L).as("xxid"),
-        col("d.decOrd").as("eventId"), col("d.decTs").as("tsMs"),
-        lit("").as("table"), lit("").as("rowKey"),
-        emptyMap.as("before"), emptyMap.as("after"))
-    // XA COMMIT ... ONE PHASE never prepares: it commits its own transaction
-    val xaOnePhase = xaDec.filter(col("decCls") === DdlClassifier.XaCommit.name)
-      .join(xaPrep, col("braXid") === col("decXid") && col("decOrd") > col("braOrd"), "left_anti")
-      .select(lit("COMMIT").as("kind"), col("decTxn").as("txnId"), lit(0L).as("xxid"),
-        col("decOrd").as("eventId"), col("decTs").as("tsMs"),
-        lit("").as("table"), lit("").as("rowKey"),
-        emptyMap.as("before"), emptyMap.as("after"))
-
-    val base = rowOps.unionByName(queryOps).unionByName(beginOps).unionByName(commitOps)
-    (if (hasXa) base.unionByName(xaCommitOps).unionByName(xaOnePhase) else base)
-      .as[Op]
-  }
+  /** Full normalization of a bounded log: raw events → the engine's op
+    * stream, ready for [[graft.streaming.TransactionAssembler]]. Each
+    * server's events arrive sorted by [[binlogOrdinal]] and [[step]] walks
+    * them lazily from an empty state, so a server's log is never held in
+    * memory. Building the Dataset launches no job. */
+  def toOps(raw: Dataset[RawEvent]): Dataset[Op] =
+    raw.groupByKey(_.serverId)(Encoders.scalaLong)
+      .flatMapSortedGroups(binlogOrdinal(col("file"), col("position"))) {
+        (_: Long, events: Iterator[RawEvent]) =>
+          var st = emptyState
+          events.flatMap { e => val (next, ops) = step(st, e); st = next; ops }
+      }(Encoders.product[Op])
 
   /** The non-data control tail (ROTATE, FORMAT_DESCRIPTION, HEARTBEAT,
     * PREVIOUS_GTIDS, INCIDENT, …) with type names — the reference's
@@ -228,11 +94,10 @@ object RawBinlogAdapter {
         col("serverId"), col("file"), col("position"), col("tsMs"),
         col("nextFile"), col("gtidSet"), col("intVar"))
 
-  /** Supplier context carried across micro-batches: current GTID and the
-    * tableId → TABLE_MAP cache (bounded by live table count, exactly like
-    * the reference's map cache). ROWS_QUERY attachment is the batch
-    * surface's `curRowsQuery` (withContext) — the op model carries no
-    * metadata slot, so the streaming state deliberately does not hold it.
+  /** Supplier context: current GTID and the tableId → TABLE_MAP cache
+    * (bounded by live table count, exactly like the reference's map
+    * cache). ROWS_QUERY text is not held: the op model carries no metadata
+    * slot for it.
     * NOTE: this case class IS the flatMapGroupsWithState state schema;
     * changing its fields invalidates existing streaming checkpoints (state
     * rows deserialize against the new encoder). When evolving it, bump
@@ -247,100 +112,92 @@ object RawBinlogAdapter {
       pendingXa: Map[String, String] = Map.empty)
   final case class TableMapEntry(db: String, table: String, pkColumns: Seq[String])
 
-  /** Streaming form of [[toOps]]: the supplier loop as a per-server state
-    * machine (`groupByKey(serverId).flatMapGroupsWithState`) — state is the
-    * reference's mutable supplier context made explicit, so TABLE_MAP /
-    * GTID context set in one micro-batch correctly applies to rows events
-    * arriving in a later one (the batch windows can't do that). Within a
-    * micro-batch, events sort by the binlog ordinal (file seq, position) —
-    * the source (a binlog reader) delivers batches in stream order,
-    * matching the single ordered partition contract of OpLogSource. Scales
-    * across servers: one state entry per serverId, like one reference
-    * supplier per source. */
+  private val emptyState = SupplierState(None, Map.empty)
+
+  private val ddlTableRe = "(?i)table\\s+`?([A-Za-z0-9_]+)`?".r
+
+  /** One supplier transition: the ops event `e` emits and the context
+    * after it. Events must arrive in binlog order per server. */
+  private def step(st: SupplierState, e: RawEvent): (SupplierState, Seq[Op]) = {
+    lazy val ord = ordinalOf(e)
+    def txnId = st.gtid.getOrElse(s"pos:${e.position}")
+    def marker(kind: String, txn: String, xxid: Long = 0L) =
+      Op(kind, txn, xxid, ord, e.tsMs, "", "", Map.empty, Map.empty)
+    e.code match {
+      case RT.GTID =>
+        (st.copy(gtid = e.gtid), Seq(marker("BEGIN", e.gtid.getOrElse(""))))
+      case RT.TABLE_MAP =>
+        (e.tableId.fold(st) { tid =>
+          st.copy(tableMaps = st.tableMaps +
+            (tid -> TableMapEntry(e.db.getOrElse(""), e.table.getOrElse(""), e.pkColumns)))
+        }, Nil)
+      case c if RT.rowCodes(c) =>
+        val kind =
+          if (RT.writeRowCodes(c)) "INSERT"
+          else if (RT.updateRowCodes(c)) "UPDATE" else "DELETE"
+        // rows whose tableId has no preceding map are dropped
+        (st, e.tableId.flatMap(st.tableMaps.get).toSeq.flatMap { m =>
+          e.rows.map { r =>
+            // per-column after-else-before: a delete keys by its before-image
+            val key = m.pkColumns
+              .flatMap(c => r.after.get(c).orElse(r.before.get(c))).mkString(";")
+            Op(kind, txnId, 0L, ord, e.tsMs, m.table, key, r.before, r.after)
+          }
+        })
+      case RT.QUERY =>
+        val sql = e.sql.getOrElse("")
+        DdlClassifier.classify(sql) match {
+          case DdlClassifier.Begin => (st, Seq(marker("BEGIN", txnId)))
+          case DdlClassifier.Commit => (st, Seq(marker("COMMIT", txnId)))
+          case DdlClassifier.XaCommit =>
+            // commit the PREPARED branch's txn at the decision position;
+            // an unknown xid is a ONE PHASE commit of the decision's own
+            // transaction (never prepared)
+            val xid = DdlClassifier.xaXid(sql)
+            (st.copy(pendingXa = st.pendingXa - xid),
+              Seq(marker("COMMIT", st.pendingXa.getOrElse(xid, txnId))))
+          case DdlClassifier.XaRollback =>
+            // the prepared branch dies uncommitted: its rows never pass the
+            // assembler's commit gate — no phantom rows
+            (st.copy(pendingXa = st.pendingXa - DdlClassifier.xaXid(sql)), Nil)
+          case DdlClassifier.Other => (st, Nil)
+          case _ =>
+            // DDL target table (best-effort parse; catalog replay re-parses
+            // the full statement — reference rewrites+replays the raw SQL)
+            val table = ddlTableRe.findFirstMatchIn(sql).map(_.group(1)).getOrElse("")
+            (st, Seq(Op("DDL", txnId, 0L, ord, e.tsMs, table, "", Map.empty, Map("ddl" -> sql))))
+        }
+      case RT.XID => (st, Seq(marker("COMMIT", txnId, e.xid.getOrElse(0L))))
+      case RT.XA_PREPARE =>
+        // park the branch under its normalized xid — no commit op
+        (e.xaId.fold(st) { x =>
+          st.copy(pendingXa = st.pendingXa + (DdlClassifier.normXid(x) -> txnId))
+        }, Nil)
+      case _ => (st, Nil) // ROWS_QUERY and the control tail: bookkeeping only
+    }
+  }
+
+  /** Streaming form of [[toOps]]: the same [[step]] per server
+    * (`groupByKey(serverId).flatMapGroupsWithState`), with the state kept
+    * between micro-batches, so TABLE_MAP / GTID / XA context set in one
+    * micro-batch applies to events arriving in a later one. Within a
+    * micro-batch, events sort by the binlog ordinal — the source (a binlog
+    * reader) delivers batches in stream order, matching the single ordered
+    * partition contract of OpLogSource, so the sort runs only on an
+    * observed order violation. */
   def toOpsStreaming(raw: Dataset[RawEvent]): Dataset[Op] = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     implicit val opEnc: Encoder[Op] = Encoders.product[Op]
     implicit val stEnc: Encoder[SupplierState] = Encoders.product[SupplierState]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-
-    raw.groupByKey(_.serverId)
+    raw.groupByKey(_.serverId)(Encoders.scalaLong)
       .flatMapGroupsWithState[SupplierState, Op](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (serverId: Long, incoming: Iterator[RawEvent], state: GroupState[SupplierState]) =>
-          var st = state.getOption.getOrElse(SupplierState(None, Map.empty))
-          val out = List.newBuilder[Op]
-          def txnId(e: RawEvent): String = st.gtid.getOrElse(s"pos:${e.position}")
-          // ordered path is free: sort only on an observed order violation
-          graft.streaming.TransactionAssembler.nearSorted(incoming)(ordinalOf).foreach { e =>
-            e.code match {
-              case RT.GTID =>
-                st = st.copy(gtid = e.gtid)
-                out += Op("BEGIN", e.gtid.getOrElse(""), 0L, ordinalOf(e), e.tsMs,
-                  "", "", Map.empty, Map.empty)
-              case RT.ROWS_QUERY => () // surfaced via withContext (batch)
-              case RT.TABLE_MAP =>
-                e.tableId.foreach { tid =>
-                  st = st.copy(tableMaps = st.tableMaps +
-                    (tid -> TableMapEntry(e.db.getOrElse(""), e.table.getOrElse(""), e.pkColumns)))
-                }
-              case c if RT.rowCodes(c) =>
-                val kind =
-                  if (RT.writeRowCodes(c)) "INSERT"
-                  else if (RT.updateRowCodes(c)) "UPDATE" else "DELETE"
-                val tm = e.tableId.flatMap(st.tableMaps.get)
-                tm.foreach { m =>
-                  e.rows.foreach { r =>
-                    // per-column after-else-before, matching the batch form
-                    val key = m.pkColumns
-                      .flatMap(c => r.after.get(c).orElse(r.before.get(c))).mkString(";")
-                    out += Op(kind, txnId(e), 0L, ordinalOf(e), e.tsMs,
-                      m.table, key, r.before, r.after)
-                  }
-                }
-              case RT.QUERY =>
-                val sql = e.sql.getOrElse("")
-                DdlClassifier.classify(sql) match {
-                  case DdlClassifier.Begin =>
-                    out += Op("BEGIN", txnId(e), 0L, ordinalOf(e), e.tsMs,
-                      "", "", Map.empty, Map.empty)
-                  case DdlClassifier.Commit =>
-                    out += Op("COMMIT", txnId(e), 0L, ordinalOf(e), e.tsMs,
-                      "", "", Map.empty, Map.empty)
-                  case DdlClassifier.XaCommit =>
-                    // commit the PREPARED branch's txn at the decision
-                    // position; an unknown xid is a ONE PHASE commit of the
-                    // decision's own transaction (never prepared)
-                    val xid = DdlClassifier.xaXid(sql)
-                    val branch = st.pendingXa.get(xid)
-                    st = st.copy(pendingXa = st.pendingXa - xid)
-                    out += Op("COMMIT", branch.getOrElse(txnId(e)), 0L,
-                      ordinalOf(e), e.tsMs, "", "", Map.empty, Map.empty)
-                  case DdlClassifier.XaRollback =>
-                    // the prepared branch dies uncommitted: its rows never
-                    // pass the assembler's commit gate — no phantom rows
-                    st = st.copy(pendingXa = st.pendingXa - DdlClassifier.xaXid(sql))
-                  case DdlClassifier.Other => ()
-                  case _ =>
-                    val table = "(?i)table\\s+`?([A-Za-z0-9_]+)`?".r
-                      .findFirstMatchIn(sql).map(_.group(1)).getOrElse("")
-                    out += Op("DDL", txnId(e), 0L, ordinalOf(e), e.tsMs,
-                      table, "", Map.empty, Map("ddl" -> sql))
-                }
-              case RT.XID =>
-                out += Op("COMMIT", txnId(e), e.xid.getOrElse(0L), ordinalOf(e),
-                  e.tsMs, "", "", Map.empty, Map.empty)
-              case RT.XA_PREPARE =>
-                // park the branch under its normalized xid — no commit op
-                e.xaId.foreach { raw =>
-                  val xid = raw.replaceAll("['`\"\\s]", "")
-                  st = st.copy(pendingXa = st.pendingXa + (xid -> txnId(e)))
-                }
-              case _ => () // control tail: supplier bookkeeping only
-            }
+        (_: Long, incoming: Iterator[RawEvent], state: GroupState[SupplierState]) =>
+          var st = state.getOption.getOrElse(emptyState)
+          val out = TransactionAssembler.nearSorted(incoming)(ordinalOf).flatMap { e =>
+            val (next, ops) = step(st, e); st = next; ops
           }
           state.update(st)
-          out.result().iterator
+          out.iterator
       }
   }
 }

@@ -147,11 +147,70 @@ class RawBinlogAdapterSpec extends SparkTestBase {
     assert(stamped.map(_.rowKey).toSeq == Seq("9"))
   }
 
-  test("supplier context: rows-query text rides to the following rows event") {
-    val ctx = RawBinlogAdapter.withContext(spark.createDataset(txn1))
-      .where($"code" === RT.WRITE_ROWS).select("curGtid", "curRowsQuery").collect()
-    assert(ctx.head.getString(0) == "s1:42")
-    assert(ctx.head.getString(1).startsWith("INSERT INTO orders"))
+  test("table maps are per server: two servers reusing a tableId with interleaved ordinals") {
+    def on(server: Long)(e: RawEvent) = e.copy(serverId = server)
+    val raw = Seq(
+      on(1)(ev(RT.GTID, 100).copy(gtid = Some("s1:1"))),
+      on(1)(ev(RT.TABLE_MAP, 110).copy(tableId = Some(7L), db = Some("shop"),
+        table = Some("orders"), pkColumns = Seq("id"))),
+      on(2)(ev(RT.GTID, 105).copy(gtid = Some("s2:1"))),
+      // server 2 maps the same tableId to another table, between server 1's
+      // map and server 1's rows event in ordinal terms
+      on(2)(ev(RT.TABLE_MAP, 115).copy(tableId = Some(7L), db = Some("crm"),
+        table = Some("users"), pkColumns = Seq("uid"))),
+      on(1)(ev(RT.WRITE_ROWS, 120).copy(tableId = Some(7L),
+        rows = Seq(RowImage(Map.empty, Map("id" -> "1"))))),
+      on(2)(ev(RT.WRITE_ROWS, 125).copy(tableId = Some(7L),
+        rows = Seq(RowImage(Map.empty, Map("uid" -> "u9"))))),
+      on(1)(ev(RT.XID, 130).copy(xid = Some(1L))),
+      on(2)(ev(RT.XID, 135).copy(xid = Some(2L))))
+    val ops = RawBinlogAdapter.toOps(spark.createDataset(raw)).collect()
+    val inserts = ops.filter(_.kind == "INSERT").map(o => (o.txnId, o.table, o.rowKey)).toSet
+    assert(inserts == Set(("s1:1", "orders", "1"), ("s2:1", "users", "u9")))
+  }
+
+  test("XA xid reuse: a later ONE PHASE commit of a decided xid commits its own rows") {
+    val map = ev(RT.TABLE_MAP, 0).copy(tableId = Some(7L), db = Some("shop"),
+      table = Some("orders"), pkColumns = Seq("id"))
+    def rows(pos: Long, id: String) = ev(RT.WRITE_ROWS, pos).copy(tableId = Some(7L),
+      rows = Seq(RowImage(Map.empty, Map("id" -> id))))
+    val raw = Seq(
+      ev(RT.GTID, 100).copy(gtid = Some("s1:90")), map.copy(position = 110), rows(120, "1"),
+      ev(RT.XA_PREPARE, 130).copy(xaId = Some("x")),
+      ev(RT.GTID, 200).copy(gtid = Some("s1:91")),
+      ev(RT.QUERY, 210, ts = 3000L).copy(sql = Some("XA COMMIT 'x'")),
+      // the same xid again, committed in one phase: nothing is parked
+      // under it any more, so it commits its own transaction
+      ev(RT.GTID, 300).copy(gtid = Some("s1:92")), map.copy(position = 310), rows(320, "2"),
+      ev(RT.QUERY, 330, ts = 5000L).copy(sql = Some("XA COMMIT 'x' ONE PHASE")))
+    val ops = RawBinlogAdapter.toOps(spark.createDataset(raw)).collect()
+    val commits = ops.filter(_.kind == "COMMIT").map(c => (c.txnId, c.tsMs)).toSet
+    assert(commits == Set(("s1:90", 3000L), ("s1:92", 5000L)))
+    val stamped = TransactionAssembler.assembleBatch(
+      spark.createDataset(ops.toSeq)).collect().filter(_.kind == "INSERT")
+    assert(stamped.map(s => (s.rowKey, s.commitTsMs)).toSet == Set(("1", 3000L), ("2", 5000L)))
+  }
+
+  test("building toOps launches no Spark job") {
+    val jobs = jobsLaunchedBy {
+      RawBinlogAdapter.toOps(spark.createDataset(txn1 :+
+        ev(RT.XA_PREPARE, 150).copy(xaId = Some("x"))))
+    }
+    assert(jobs == 0, s"building toOps launched $jobs job(s)")
+  }
+
+  test("runBatch over toOps with a catalog and validation leaves nothing cached") {
+    import graft.pipeline.{PipelineConfig, ReplicatorPipeline}
+    spark.catalog.clearCache() // whatever earlier specs left cached
+    val dir = java.nio.file.Files.createTempDirectory("toopscache").toString
+    val cfg = PipelineConfig(s"$dir/sink", s"$dir/ckpt", partitions = 2,
+      validationDir = Some(s"$dir/validation"),
+      schemaCatalog = Some(new graft.augment.SchemaCatalog("shop")))
+    val raw = ev(RT.QUERY, 50).copy(sql = Some("CREATE TABLE orders (id INT PRIMARY KEY, amt INT)")) +: txn1
+    ReplicatorPipeline.runBatch(RawBinlogAdapter.toOps(spark.createDataset(raw)), cfg)
+    assert(spark.read.parquet(s"$dir/sink").filter(col("table") === "orders")
+      .select("row_key").distinct().count() == 2)
+    assert(spark.sharedState.cacheManager.isEmpty, "runBatch over toOps left a cache")
   }
 
   test("streaming supplier state: table-map/gtid context crosses micro-batch boundaries") {
@@ -174,11 +233,10 @@ class RawBinlogAdapterSpec extends SparkTestBase {
       q.processAllAvailable()
       val streamed = spark.table("raw_stream_ops").as[graft.streaming.Op].collect()
       val batch = RawBinlogAdapter.toOps(spark.createDataset(txn1)).collect()
-      def norm(ops: Seq[graft.streaming.Op]) =
-        ops.filter(o => o.kind != "BEGIN").sortBy(o => (o.eventId, o.rowKey)).toList
-      // streaming emits one BEGIN per GTID (not also per BEGIN-query); data
-      // and commit ops must agree exactly with the batch adapter
-      assert(norm(streamed.toSeq) == norm(batch.toSeq))
+      def sorted(ops: Seq[graft.streaming.Op]) =
+        ops.sortBy(o => (o.eventId, o.kind, o.rowKey)).toList
+      // every op, BEGINs included, agrees with the bounded walk
+      assert(sorted(streamed.toSeq) == sorted(batch.toSeq))
     } finally q.stop()
   }
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -54,33 +53,11 @@ class SinkReadSpec extends SparkTestBase {
     val dir = tmp("nojobs")
     TimeMachineSink.write(stamped("t"), dir, batchId = 0L)
     TimeMachineSink.write(stamped("u"), dir, batchId = 1L)
-    val (group, marker) = ("sink-read-build", "sink-read-marker")
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    @volatile var markerJob = -1
-    val markerDone = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(`marker`) => markerJob = e.jobId
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob) markerDone.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "build the sink reads")
+    val jobs = jobsLaunchedBy {
       TimeMachineSink.latestRows(spark, dir)
       TimeMachineSink.rowsAsOf(spark, dir, 2000L * 1000)
-      // listener events arrive in order: once a later job has ended,
-      // every job the builds launched has been counted
-      sc.setJobGroup(marker, "marker")
-      spark.range(1).count()
-      assert(markerDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-    assert(started.get == 0, s"building the reads launched ${started.get} job(s)")
+    }
+    assert(jobs == 0, s"building the reads launched $jobs job(s)")
   }
 
   /** The as-of read as it was before the one-exchange window form: latest

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,6 +12,36 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   override def afterAll(): Unit = () // shared session; JVM exit cleans up
+
+  /** The number of Spark jobs `body` launches, counted by job group. */
+  def jobsLaunchedBy(body: => Unit): Int = {
+    val (group, marker) = ("jobs-counted", "jobs-marker")
+    val started = new AtomicInteger
+    @volatile var markerJob = -1
+    val markerDone = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`marker`) => markerJob = e.jobId
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerDone.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      // listener events arrive in order: once a later job has ended,
+      // every job of the group has been counted
+      sc.setJobGroup(marker, "marker")
+      spark.range(1).count()
+      assert(markerDone.await(30, TimeUnit.SECONDS))
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    started.get
+  }
 }
 
 object SparkTestBase {
