@@ -1061,12 +1061,9 @@ object SparkEntry {
           col("pk").cast("long").as("dst"))
         .distinct()
         .localCheckpoint()
-      // at 2 rounds the pure lazy ROUND plan beats per-round score
-      // materialization (3.3 → 2.1 s at sf0.1): one job, no round
-      // launches — deeper iterates should flip back to the checkpoint
-      // cadence
+      // hits itself is one lazy plan over `ed` (see its scaladoc)
       val sc = graft.operators.Graph.hits(
-        ed, col("src"), col("dst"), rounds = HitsRounds, checkpointEvery = 0)
+        ed, col("src"), col("dst"), rounds = HitsRounds)
       val auth = sc.filter(col("v") < HitsCustOff)
         .orderBy(col("authority").desc, col("v").asc).limit(HitsK)
         .select(lit("authority").as("role"), col("v").as("id"),
@@ -3985,8 +3982,8 @@ object SparkEntry {
       // scan finds; the quadratic form exists only as the oracle. The
       // 16-bit combination keys are the skew lever: text-derived aHashes
       // cluster heavily, Σ per-key f² measures 17.3M on 8-bit single
-      // bands vs 6.2M on combos at sf0.1, with zero recall cost (unlike a
-      // maxBandDf drop cap, which loses 30% of true pairs here at 256).
+      // bands vs 6.2M on combos at sf0.1, with zero recall cost (dropping
+      // keys above a df cap of 256 instead lost 30% of true pairs here).
       // Same PNG encode→ImageIO decode→hash path as mm_phash.
       import s.implicits._
       val withPng = t(s, d, "documents")

@@ -702,19 +702,19 @@ object Dedup {
     * because the salt's only effect under a broadcast plan is to multiply
     * the broadcast payload. Precision is exact (native dot, round-6
     * cosine — the oracle's float-op order); recall is bounded by the
-    * clustering, which is the algorithm's documented trade. */
+    * clustering, which is the algorithm's documented trade. Building the
+    * result runs the assignment once and keeps it ([[Materialize]]). */
   def semanticDedup(df: DataFrame, idCol: Column, vecCol: Column,
                     centroids: DataFrame, threshold: Double,
-                    blocks: Int = 1,
-                    materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+                    blocks: Int = 1): DataFrame = {
     require(blocks >= 0, "blocks must be >= 0 (0 = default)")
     val b = blocks.max(1)
-    // materialize the assigned relation ONCE (the knnGraphIvf policy knob:
-    // localCheckpoint local default, reliable checkpoint() on clusters,
-    // identity = pure lazy plan): it feeds both pair-join sides AND the
-    // final kept-flag join — unmaterialized, each of the three references
-    // replays the O(n·c·dim) assignment scan (n^1.5 at the derived c ≈ √n).
-    val assigned = materialize(Similarity.ivfAssign(df, idCol, vecCol, centroids)
+    // materialize the assigned relation ONCE ([[Materialize]], so building
+    // this DataFrame runs the assignment): it feeds both pair-join sides
+    // AND the final kept-flag join — unmaterialized, each of the three
+    // references replays the O(n·c·dim) assignment scan (n^1.5 at the
+    // derived c ≈ √n).
+    val assigned = Materialize(Similarity.ivfAssign(df, idCol, vecCol, centroids)
       .withColumn("__sd_n", sqrt(Similarity.dot(col("v"), col("v")))))
     val right = assigned.select(col("centroid_id"), col("vec_id").as("__sd_bid"),
         col("v").as("__sd_bv"), col("__sd_n").as("__sd_bn"))

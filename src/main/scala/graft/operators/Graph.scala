@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics, Spark-first: each PageRank round is one
   * declarative join + aggregation over the (src, dst) edge relation — the
@@ -16,7 +17,15 @@ import org.apache.spark.sql.functions._
   * bit-identical BIGINTs on any engine, and the DuckDB oracle simply
   * unrolls the same five rounds as chained CTEs. No float ever appears.
   * The flooring drift (Σ ranks < scale) is part of the defined semantics,
-  * identical on both sides. */
+  * identical on both sides.
+  *
+  * Materialization: a kernel that reads a relation more than once (every
+  * round, or from several join sides) persists it or materializes it with
+  * [[Materialize]] (localCheckpoint, or a reliable checkpoint when the
+  * session has a checkpoint dir), and the iterative kernels cut lineage
+  * every round the same way. That makes building their DataFrames eager:
+  * the work up to the last materialization runs at construction. [[hits]]
+  * is the exception: one lazy plan. */
 object Graph {
 
   /** PageRank with damping 0.85 over a directed edge list, `iterations`
@@ -36,44 +45,23 @@ object Graph {
     * each round shuffles the edge relation by src (join) then by dst
     * (aggregate) — two exchanges per round over edge-sized data, rank
     * tables stay node-sized and broadcast while small. The driver loop
-    * builds the PLAN; nothing collects. */
+    * builds the PLAN and materializes each round's rank table; nothing
+    * collects. */
   def pageRank(edges: DataFrame, srcCol: Column, dstCol: Column,
-      iterations: Int, scale: Long = 1000000000000L,
-      checkpointEvery: Int = 1,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      iterations: Int, scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    // checkpointEvery == 0 → no materialization anywhere: the call returns
-    // a pure, fully-replayable lazy plan with ZERO cached or checkpointed
-    // state (the pre-round-8 contract). That is the safe mode for small
-    // iteration counts on clusters with executor churn — localCheckpoint
-    // blocks are non-replayable, so an executor loss after a
-    // localCheckpoint'd loop fails the job unrecoverably. Cluster callers
-    // who want lineage capping WITH fault tolerance pass
-    // `materialize = _.checkpoint()` (reliable, HDFS-backed — requires
-    // sparkContext.setCheckpointDir); localCheckpoint stays the local-mode
-    // default because it is 10-100× cheaper and local[n] has no executor
-    // loss to survive.
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
-    val doMat = checkpointEvery >= 1
     // The edge relation (with out-degree attached ONCE) persists for the
     // loop — the standard posture for iterative graph ops (SCALE.md
     // principle 7): without it every round lazily re-derives the caller's
     // edge-construction plan (for the co-purchase graph, a self-join +
     // distinct — measured ~5× the rollup cost when recomputed per round).
     // The node and count tables are derived once off the same cache.
-    // In lazy mode (checkpointEvery == 0) nothing persists either — the
-    // returned plan must reference no cache that this call later drops.
     val ed = edges.select(srcCol.as("src"), dstCol.as("dst"))
     val deg = ed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val edDeg0 = ed.join(deg, "src")
-    val edDeg = if (doMat)
-      edDeg0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else edDeg0
-    val nodes0 = edDeg.select(col("src").as("v"))
+    val edDeg = ed.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = edDeg.select(col("src").as("v"))
       .union(edDeg.select(col("dst").as("v"))).distinct()
-    val nodes = if (doMat)
-      nodes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else nodes0
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val n = nodes.agg(count(lit(1)).as("nn"))
     // `div` (SQL integer division), never `/`: a double quotient that
     // lands within an ulp of an integer would cast-truncate differently
@@ -99,25 +87,21 @@ object Graph {
           (expr(s"${scale * 15L / 100L} div nn") +
             expr("85 * s div 100")).as("r"))
       i += 1
-      // rank-table materialization cadence (default: every round). Two
-      // effects: (a) lineage cap — without it a 50-round plan is 50 joins
-      // deep (analyzer cost superlinear, task binaries grow per round);
-      // (b) EXACT SIZE STATS — a materialized node-sized table lets AQE
-      // broadcast the rank side of the next round's edge join instead of
-      // planning a conservative shuffle (measured 7.5 → 5.6 s on the 3-
-      // round sf0.1 bench row). The cost is holding one node-sized RDD
-      // per round in executor memory; raise the cadence only on graphs
-      // whose node set strains storage memory.
-      if (doMat && i % checkpointEvery == 0 && i < iterations)
-        ranks = materialize(ranks)
+      // the rank table materializes every round. Two effects: (a) lineage
+      // cap — without it a 50-round plan is 50 joins deep (analyzer cost
+      // superlinear, task binaries grow per round); (b) EXACT SIZE STATS —
+      // a materialized node-sized table lets AQE broadcast the rank side
+      // of the next round's edge join instead of planning a conservative
+      // shuffle (measured 7.5 → 5.6 s on the 3-round sf0.1 bench row). The
+      // cost is holding one node-sized table per round in executor memory.
+      if (i < iterations) ranks = Materialize(ranks)
     }
-    if (!doMat) return ranks // pure lazy plan, zero retained state
     // materialize the final node-sized rank table, then drop the two
     // edge-sized caches: without this every call leaked edDeg+nodes for
     // any caller not wrapped in a clearCache (library hygiene). The
     // materialization is eager and the ranks are deterministic integers,
     // so truncating lineage loses nothing.
-    val out = materialize(ranks)
+    val out = Materialize(ranks)
     edDeg.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     out
@@ -144,32 +128,32 @@ object Graph {
     * once for closing), and the global clustering coefficient
     * `3·tri/wedges` in parts-per-million (floor-div — engine-exact;
     * d(d−1) is always even so the /2 is exact integer). */
-  def triangleStats(edges: DataFrame, srcCol: Column, dstCol: Column,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    // NOTE on the `materialize` default (here and in every kernel carrying
-    // this knob): localCheckpoint is EAGER — DataFrame *construction* runs
-    // the upstream Spark jobs, so building the plan for inspection only
-    // (explain, plan-shape tests) should pass `identity`; and localCheckpoint
-    // blocks are non-replayable, so cluster callers that must survive
-    // executor loss pass `_.checkpoint()` (reliable, requires
-    // setCheckpointDir). localCheckpoint stays the local default because it
-    // is 10-100× cheaper and local[n] has no executor loss to survive.
-    //
-    // und and ori MATERIALIZE (same policy knob as pageRank: localCheckpoint
-    // locally, reliable checkpoint() on clusters, identity = pure lazy plan):
-    // und is referenced twice (deg + orientation) and ori three times
-    // (both wedge legs + the closing probe), each reference otherwise
-    // REPLAYING the caller's edge construction — for the co-purchase graph a
-    // window + self-join, and exchange reuse does not fire across the
-    // alias-renamed branches (the unmaterialized sf0.1 plan carries 103
-    // Exchanges / 68 scans; measured 14.6 → 6.7 s warm, 40.6 → 17.0 s cold
-    // with the two checkpoints). Both are edge-sized, the kernel's working
-    // set anyway.
-    val und = materialize(edges.select(srcCol.as("a"), dstCol.as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct())
+  def triangleStats(edges: DataFrame, srcCol: Column, dstCol: Column): DataFrame = {
+    val (deg, closed) = closedWedges(edges, srcCol, dstCol)
+    val tri = closed.agg(count(lit(1)).as("n_triangles"))
+    val wed = deg.agg(sum(expr("d * (d - 1) div 2")).as("n_wedges"))
+    tri.crossJoin(wed).select(
+      col("n_triangles"), col("n_wedges"),
+      when(col("n_wedges") > 0,
+        expr("3000000 * n_triangles div n_wedges")).otherwise(lit(0L))
+        .as("clustering_ppm"))
+  }
+
+  /** The orientation → wedge → close core of [[triangleStats]] and
+    * [[localClustering]]: the degree table (v, d) of the undirected simple
+    * graph and its closed wedges (u, v1, v2), one row per triangle.
+    *
+    * und and ori MATERIALIZE: und is referenced twice (deg + orientation)
+    * and ori three times (both wedge legs + the closing probe), each
+    * reference otherwise REPLAYING the caller's edge construction — for the
+    * co-purchase graph a window + self-join, and exchange reuse does not
+    * fire across the alias-renamed branches (the unmaterialized sf0.1 plan
+    * carries 103 Exchanges / 68 scans; measured 14.6 → 6.7 s warm,
+    * 40.6 → 17.0 s cold with the two checkpoints). Both are edge-sized,
+    * the kernel's working set anyway. */
+  private def closedWedges(edges: DataFrame, srcCol: Column,
+      dstCol: Column): (DataFrame, DataFrame) = {
+    val und = Materialize(canonicalEdges(edges, srcCol, dstCol))
     val deg = und.select(col("a").as("v"))
       .union(und.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
@@ -181,7 +165,7 @@ object Graph {
       .join(deg.withColumnRenamed("v", "b").withColumnRenamed("d", "db"), "b")
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val ori = materialize(withDeg.select(
+    val ori = Materialize(withDeg.select(
       when(aFirst, col("a")).otherwise(col("b")).as("u"),
       when(aFirst, col("b")).otherwise(col("a")).as("w"),
       when(aFirst, col("db")).otherwise(col("da")).as("dw")))
@@ -202,20 +186,23 @@ object Graph {
     val closed = wedges.join(
       ori.select(col("u").as("v1"), col("w").as("v2")).hint("shuffle_hash"),
       Seq("v1", "v2"))
-    val tri = closed.agg(count(lit(1)).as("n_triangles"))
-    val wed = deg.agg(sum(expr("d * (d - 1) div 2")).as("n_wedges"))
-    tri.crossJoin(wed).select(
-      col("n_triangles"), col("n_wedges"),
-      when(col("n_wedges") > 0,
-        expr("3000000 * n_triangles div n_wedges")).otherwise(lit(0L))
-        .as("clustering_ppm"))
+    (deg, closed)
   }
+
+  /** Canonical undirected simple edges: a < b, distinct, no self-loops. */
+  private def canonicalEdges(edges: DataFrame, srcCol: Column,
+      dstCol: Column): DataFrame =
+    edges.select(srcCol.as("a"), dstCol.as("b"))
+      .filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b"))
+      .distinct()
 
   /** Per-node (local) clustering coefficient (Watts & Strogatz, "Collective
     * dynamics of 'small-world' networks", Nature '98): for every node of
     * degree ≥ 2, `lcc = 2·tri(v) / (d(v)·(d(v)−1))` in integer
-    * parts-per-million (floor-div, engine-exact). The triangle side reuses
-    * [[triangleStats]]'s degree-ordered orientation verbatim — each
+    * parts-per-million (floor-div, engine-exact). The triangle side is
+    * [[triangleStats]]'s degree-ordered orientation core — each
     * triangle materializes exactly once as a closed wedge (u, v1, v2),
     * then EXPLODES to its three endpoints for a node-keyed count, so the
     * per-node attribution costs one map-side stack + one node-keyed
@@ -223,39 +210,8 @@ object Graph {
     * nodes come back via a left join on the degree table (node-sized).
     * Output per node: (v, degree, n_tri, lcc_ppm) — all BIGINT. */
   def localClustering(edges: DataFrame, srcCol: Column, dstCol: Column,
-      scale: Long = 1000000L,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    // same und/ori materialization rationale as [[triangleStats]]: und is
-    // referenced three times here (deg + orientation + the final degree
-    // join), ori three times — unmaterialized, each replays the caller's
-    // edge construction
-    val und = materialize(edges.select(srcCol.as("a"), dstCol.as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct())
-    val deg = und.select(col("a").as("v"))
-      .union(und.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-    val withDeg = und
-      .join(deg.withColumnRenamed("v", "a").withColumnRenamed("d", "da"), "a")
-      .join(deg.withColumnRenamed("v", "b").withColumnRenamed("d", "db"), "b")
-    val aFirst = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val ori = materialize(withDeg.select(
-      when(aFirst, col("a")).otherwise(col("b")).as("u"),
-      when(aFirst, col("b")).otherwise(col("a")).as("w"),
-      when(aFirst, col("db")).otherwise(col("da")).as("dw")))
-    val e1 = ori.select(col("u"), col("w").as("v1"), col("dw").as("d1"))
-    val e2 = ori.select(col("u"), col("w").as("v2"), col("dw").as("d2"))
-    val wedges = e1.join(e2, Seq("u"))
-      .filter(col("d1") < col("d2") ||
-        (col("d1") === col("d2") && col("v1") < col("v2")))
-    // same SHUFFLE_HASH discipline as triangleStats: the wedge stream is
-    // the big side and must never sort
-    val closed = wedges.join(
-      ori.select(col("u").as("v1"), col("w").as("v2")).hint("shuffle_hash"),
-      Seq("v1", "v2"))
+      scale: Long = 1000000L): DataFrame = {
+    val (deg, closed) = closedWedges(edges, srcCol, dstCol)
     val perNode = closed
       .select(explode(array(col("u"), col("v1"), col("v2"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("t"))
@@ -270,32 +226,24 @@ object Graph {
     * search", WWW '03; the random surfer teleports back to a SEED set
     * instead of the whole graph): the "items similar to this catalog" /
     * seeded-recommendation read. Same integer algebra, loop shape,
-    * persist/materialize policy and no-float discipline as [[pageRank]] —
+    * persist/materialize rule and no-float discipline as [[pageRank]] —
     * only the teleport term changes: seeds get `scale·15% div |S∩V|`,
     * everyone else 0, and the initial mass sits uniformly on the seeds.
     * Seeds outside the node set are ignored (they can neither receive
     * nor emit mass); |S∩V| must be nonzero. */
   def personalizedPageRank(edges: DataFrame, srcCol: Column, dstCol: Column,
       seeds: DataFrame, seedCol: Column, iterations: Int,
-      scale: Long = 1000000000000L, checkpointEvery: Int = 1,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
-    val doMat = checkpointEvery >= 1
     val ed = edges.select(srcCol.as("src"), dstCol.as("dst"))
     val deg = ed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val edDeg0 = ed.join(deg, "src")
-    val edDeg = if (doMat)
-      edDeg0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else edDeg0
+    val edDeg = ed.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
     val sd = seeds.select(seedCol.as("v")).distinct()
       .withColumn("__seed", lit(1))
-    val nodes0 = edDeg.select(col("src").as("v"))
+    val nodes = edDeg.select(col("src").as("v"))
       .union(edDeg.select(col("dst").as("v"))).distinct()
       .join(sd, Seq("v"), "left")
-    val nodes = if (doMat)
-      nodes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else nodes0
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val ns = nodes.filter(col("__seed").isNotNull).agg(count(lit(1)).as("k"))
     val isSeed = col("__seed").isNotNull
     var ranks = nodes.crossJoin(broadcast(ns))
@@ -320,11 +268,9 @@ object Graph {
         .groupBy("v").agg(sum(col("t")).as("t"), sum(col("c")).as("s"))
         .select(col("v"), (col("t") + expr("85 * s div 100")).as("r"))
       i += 1
-      if (doMat && i % checkpointEvery == 0 && i < iterations)
-        ranks = materialize(ranks)
+      if (i < iterations) ranks = Materialize(ranks)
     }
-    if (!doMat) return ranks
-    val out = materialize(ranks)
+    val out = Materialize(ranks)
     edDeg.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     out
@@ -345,30 +291,21 @@ object Graph {
     * Scale shape: each round is one node-sized hash-agg (degrees, map-side
     * partial) + two survivor joins keyed on the edge endpoints — the
     * survivor set is node-sized, so AQE broadcasts it against the
-    * edge-sized relation once the frontier materializes (the same
-    * cadence/`materialize` policy as [[pageRank]]: localCheckpoint locally,
-    * reliable checkpoint() on clusters, 0 = pure lazy plan). Nothing
-    * global, no windows; the peel is monotone so each round's edge
-    * relation only shrinks. */
+    * edge-sized relation once the frontier materializes (every round, as
+    * in [[pageRank]]). Nothing global, no windows; the peel is monotone
+    * so each round's edge relation only shrinks. */
   def kCoreMembers(edges: DataFrame, srcCol: Column, dstCol: Column,
-      k: Int, rounds: Int, checkpointEvery: Int = 1,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("v")).union(e.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg"))
-    var e = edges.select(srcCol.as("a"), dstCol.as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
     // materialize the INITIAL canonical edge set too (round-11): round 1
     // references it three times (degree census + both survivor joins), each
     // otherwise replaying the caller's edge construction — the same
     // multi-reference replay triangleStats measured at 2× of the kernel
-    if (checkpointEvery >= 1) e = materialize(e)
+    var e = Materialize(canonicalEdges(edges, srcCol, dstCol))
     var i = 0
     while (i < rounds) {
       val keep = degrees(e).filter(col("deg") >= k).select("v")
@@ -376,8 +313,7 @@ object Graph {
         .join(keep.withColumnRenamed("v", "b"), "b")
         .select("a", "b")
       i += 1
-      if (checkpointEvery >= 1 && i % checkpointEvery == 0 && i < rounds)
-        e = materialize(e)
+      if (i < rounds) e = Materialize(e)
     }
     degrees(e)
   }
@@ -385,11 +321,7 @@ object Graph {
   /** Canonical undirected simple edges (a < b, distinct, no loops) plus the
     * symmetric closure both iterative kernels below iterate over. */
   private def symmetric(edges: DataFrame, srcCol: Column, dstCol: Column): DataFrame = {
-    val und = edges.select(srcCol.as("a"), dstCol.as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
+    val und = canonicalEdges(edges, srcCol, dstCol)
     // deliberately the UNION form, not an explode-based one-pass
     // symmetrization (round-11 tried it): the kernels that iterate over this
     // relation persist it and every round reads the CACHED partitions — the
@@ -420,35 +352,25 @@ object Graph {
     * anti-join probes a node-sized table. Nothing global, nothing
     * collects. */
   def bfsDistances(edges: DataFrame, srcCol: Column, dstCol: Column,
-      seeds: DataFrame, seedCol: Column, maxRounds: Int,
-      checkpointEvery: Int = 1,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      seeds: DataFrame, seedCol: Column, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
-    val doMat = checkpointEvery >= 1
-    val sym0 = symmetric(edges, srcCol, dstCol)
-    val sym = if (doMat)
-      sym0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sym0
+    val sym = symmetric(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
     // symmetric ⇒ every node appears as a source endpoint
-    var dist = sym.select(col("a").as("v")).distinct()
+    var dist = Materialize(sym.select(col("a").as("v")).distinct()
       .join(seeds.select(seedCol.as("v")).distinct(), Seq("v"), "left_semi")
-      .select(col("v"), lit(0L).as("dist"))
-    dist = if (doMat) materialize(dist) else dist
+      .select(col("v"), lit(0L).as("dist")))
     var frontier = dist.select("v")
     var i = 0
     while (i < maxRounds) {
-      val nxt0 = sym.join(frontier.withColumnRenamed("v", "a"), "a")
+      val nxt = Materialize(sym.join(frontier.withColumnRenamed("v", "a"), "a")
         .select(col("b").as("v")).distinct()
         .join(dist, Seq("v"), "left_anti")
-        .select(col("v"), lit(i + 1L).as("dist"))
-      val nxt = if (doMat && (i + 1) % checkpointEvery == 0) materialize(nxt0)
-        else nxt0
+        .select(col("v"), lit(i + 1L).as("dist")))
       dist = dist.union(nxt)
       frontier = nxt.select("v")
       i += 1
     }
-    if (doMat) sym.unpersist(blocking = false)
+    sym.unpersist(blocking = false)
     dist
   }
 
@@ -468,18 +390,12 @@ object Graph {
     * `max_by` over (count, −label): within a node the (count, −label)
     * pairs are DISTINCT (one row per label), so the pick is total-order
     * deterministic with no window sort. Label tables stay node-sized and
-    * materialize on the [[pageRank]] cadence so AQE broadcasts them into
-    * the edge join. */
+    * materialize every round, as in [[pageRank]], so AQE broadcasts them
+    * into the edge join. */
   def labelPropagation(edges: DataFrame, srcCol: Column, dstCol: Column,
-      rounds: Int, checkpointEvery: Int = 1,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
-    val doMat = checkpointEvery >= 1
-    val sym0 = symmetric(edges, srcCol, dstCol)
-    val sym = if (doMat)
-      sym0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sym0
+    val sym = symmetric(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
     var lab = sym.select(col("a").as("v")).distinct()
       .select(col("v"), col("v").as("lab"))
     var i = 0
@@ -491,11 +407,9 @@ object Graph {
         .agg(max_by(col("lab"), struct(col("c"), (-col("lab")).as("nl")))
           .as("lab"))
       i += 1
-      if (doMat && i % checkpointEvery == 0 && i < rounds)
-        lab = materialize(lab)
+      if (i < rounds) lab = Materialize(lab)
     }
-    if (!doMat) return lab
-    val out = materialize(lab)
+    val out = Materialize(lab)
     sym.unpersist(blocking = false)
     out
   }
@@ -520,13 +434,11 @@ object Graph {
     * is a TakeOrdered over the aggregated (output-bound) relation — no
     * global sort of the wedge stream. */
   def linkPredictRA(edges: DataFrame, srcCol: Column, dstCol: Column,
-      k: Int, scale: Long = 1000000L,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      k: Int, scale: Long = 1000000L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // the symmetric closure is referenced three times (deg, the neighbor
-    // relation, the known-edge anti-join) — materialize it once (the
-    // triangleStats policy knob; identity = pure lazy plan)
-    val sym = materialize(symmetric(edges, srcCol, dstCol))
+    // relation, the known-edge anti-join) — materialize it once
+    val sym = Materialize(symmetric(edges, srcCol, dstCol))
     val deg = sym.groupBy(col("a").as("z")).agg(count(lit(1)).as("dz"))
     val nb = sym.select(col("a").as("z"), col("b").as("x")).join(deg, "z")
     val wedges = nb
@@ -553,39 +465,30 @@ object Graph {
     *
     * Per round: one edge-keyed join against the CURRENT distance table +
     * one node-keyed min-agg over (previous ∪ relaxed) — edge-sized
-    * exchanges, distance table node-sized (AQE broadcasts it on the
-    * [[pageRank]] materialize cadence; `checkpointEvery = 0` keeps the
-    * lazy replayable plan). Unreached nodes are absent, not ∞ rows.
+    * exchanges, distance table node-sized (materialized every round, as in
+    * [[pageRank]], so AQE broadcasts it). Unreached nodes are absent, not ∞ rows.
     * Output: (v, dist) BIGINTs for every node reached within
     * `maxRounds` hops. */
   def sssp(edges: DataFrame, srcCol: Column, dstCol: Column, wCol: Column,
-      seeds: DataFrame, seedCol: Column, maxRounds: Int,
-      checkpointEvery: Int = 1,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      seeds: DataFrame, seedCol: Column, maxRounds: Int): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
-    val doMat = checkpointEvery >= 1
-    val ed0 = edges.select(srcCol.as("src"), dstCol.as("dst"),
-      wCol.cast("long").as("w"))
-    val ed = if (doMat)
-      ed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else ed0
+    val ed = edges.select(srcCol.as("src"), dstCol.as("dst"),
+        wCol.cast("long").as("w"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = ed.select(col("src").as("v"))
       .union(ed.select(col("dst").as("v"))).distinct()
-    var dist = seeds.select(seedCol.as("v")).distinct()
+    var dist = Materialize(seeds.select(seedCol.as("v")).distinct()
       .join(nodes, "v") // off-graph seeds are ignored (cannot reach)
-      .select(col("v"), lit(0L).as("dist"))
-    if (doMat) dist = materialize(dist)
+      .select(col("v"), lit(0L).as("dist")))
     for (h <- 1 to maxRounds) {
       val relaxed = ed.join(dist.withColumnRenamed("v", "src"), "src")
         .select(col("dst").as("v"), (col("dist") + col("w")).as("dist"))
       dist = dist.unionAll(relaxed)
         .groupBy("v").agg(min(col("dist")).as("dist"))
-      if (doMat && h % checkpointEvery == 0 && h < maxRounds)
-        dist = materialize(dist)
+      if (h < maxRounds) dist = Materialize(dist)
     }
-    val out = if (doMat) materialize(dist) else dist
-    if (doMat) ed.unpersist(blocking = false)
+    val out = Materialize(dist)
+    ed.unpersist(blocking = false)
     out
   }
 
@@ -607,19 +510,12 @@ object Graph {
     * treated undirected (symmetrized); isolated self-loops drop. Output:
     * (hop, reached_pairs) BIGINTs, hop = 0..maxHops. */
   def neighborhoodFunction(edges: DataFrame, srcCol: Column, dstCol: Column,
-      maxHops: Int, k: Int = 2048, checkpointEvery: Int = 1,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      maxHops: Int, k: Int = 2048): DataFrame = {
     import graft.functions.KmvSetOps._
     require(maxHops >= 0, "maxHops must be >= 0")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
-    val doMat = checkpointEvery >= 1
-    val sym0 = symmetric(edges, srcCol, dstCol)
-    val sym = if (doMat)
-      sym0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sym0
-    var sk = sym.select(col("a").as("v")).distinct()
-      .groupBy("v").agg(kmvSketch(xxhash64(col("v")), k).as("sk"))
-    if (doMat) sk = materialize(sk)
+    val sym = symmetric(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
+    var sk = Materialize(sym.select(col("a").as("v")).distinct()
+      .groupBy("v").agg(kmvSketch(xxhash64(col("v")), k).as("sk")))
     def census(h: Int, s: DataFrame): DataFrame =
       s.agg(sum(kmvEstimate(col("sk"))).as("reached_pairs"))
         .select(lit(h.toLong).as("hop"), col("reached_pairs"))
@@ -630,10 +526,10 @@ object Graph {
       sk = sk.join(nbr, Seq("v"), "left")
         .select(col("v"), when(col("nsk").isNull, col("sk"))
           .otherwise(kmvUnion(col("sk"), col("nsk"))).as("sk"))
-      if (doMat && h % checkpointEvery == 0) sk = materialize(sk)
+      sk = Materialize(sk)
       out = out.unionAll(census(h, sk))
     }
-    if (doMat) sym.unpersist(blocking = false)
+    sym.unpersist(blocking = false)
     out
   }
 
@@ -653,22 +549,17 @@ object Graph {
     * hub-capped graphs this lane feeds (deg ≤ ~32) three rounds stay
     * far inside 64 bits; for higher rounds or fat hubs switch to the
     * normalized DECIMAL form. Per round: two edge-keyed joins + two
-    * node-keyed hash-aggs (the pageRank exchange shape); score tables
-    * stay node-sized (AQE broadcasts them once materialized on the same
-    * cadence policy as [[pageRank]] — `checkpointEvery = 0` keeps the
-    * pure lazy plan for replayability on real clusters). Nodes missing
+    * node-keyed hash-aggs (the pageRank exchange shape). Unlike the other
+    * iterative kernels HITS persists and materializes nothing: the result
+    * is one lazy, fully replayable plan (at the 2 rounds `q_hits` runs it
+    * beat per-round score materialization, 3.3 → 2.1 s at sf0.1; deeper
+    * iterates would want the [[pageRank]] rule). Nodes missing
     * an in- (out-) edge side carry score 0, not null. Output:
     * (v, authority, hub) BIGINTs for every node. */
   def hits(edges: DataFrame, srcCol: Column, dstCol: Column,
-      rounds: Int, checkpointEvery: Int = 1,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
-    val doMat = checkpointEvery >= 1
-    val ed0 = edges.select(srcCol.as("src"), dstCol.as("dst"))
-    val ed = if (doMat)
-      ed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else ed0
+    val ed = edges.select(srcCol.as("src"), dstCol.as("dst"))
     val nodes = ed.select(col("src").as("v"))
       .union(ed.select(col("dst").as("v"))).distinct()
     // intermediate score tables stay SPARSE (only nodes actually reached):
@@ -682,18 +573,11 @@ object Graph {
         .groupBy(col("dst").as("v")).agg(sum(col("h")).as("a"))
       h = ed.join(a.withColumnRenamed("v", "dst"), "dst")
         .groupBy(col("src").as("v")).agg(sum(col("a")).as("h"))
-      if (doMat && i % checkpointEvery == 0 && i < rounds) {
-        a = materialize(a); h = materialize(h)
-      }
     }
-    val out0 = nodes
+    nodes
       .join(a, Seq("v"), "left").join(h, Seq("v"), "left")
       .select(col("v"), coalesce(col("a"), lit(0L)).as("authority"),
         coalesce(col("h"), lit(0L)).as("hub"))
-    if (!doMat) return out0
-    val out = materialize(out0)
-    ed.unpersist(blocking = false)
-    out
   }
 
   /** Newman modularity of a node partition in integer parts-per-million
@@ -719,18 +603,12 @@ object Graph {
     * labeling (LPA's output labels every node of the same graph). */
   def modularityPpm(edges: DataFrame, srcCol: Column, dstCol: Column,
       labels: DataFrame, vCol: Column, labCol: Column,
-      scale: Long = 1000000L,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     // the canonical undirected edge set is referenced THREE times (m census,
-    // the label join, the degree census) — materialize it once (the
-    // triangleStats policy knob: localCheckpoint locally, checkpoint() on
-    // clusters, identity = pure lazy plan); unmaterialized, each reference
-    // replays the caller's edge construction plus this dedup exchange
-    val und = materialize(edges.select(srcCol.as("a"), dstCol.as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct())
+    // the label join, the degree census) — materialize it once;
+    // unmaterialized, each reference replays the caller's edge
+    // construction plus this dedup exchange
+    val und = Materialize(canonicalEdges(edges, srcCol, dstCol))
     val lab = labels.select(vCol.as("v"), labCol.as("lab"))
     val mm = und.agg(count(lit(1)).as("m"))
     // NO broadcast hint on the labels table: it is NODE-sized, and a forced

@@ -540,7 +540,6 @@ object Multimodal {
     * joined pair. Emits (a_id, b_id, hamming), a < b. */
   def phashNearDup(hashed: DataFrame, idCol: Column, hashCol: Column,
       maxHamming: Int, bands: Int = 8, comboBands: Int = 1,
-      maxBandDf: Int = Int.MaxValue,
       saltHotDf: Int = Int.MaxValue, saltBlocks: Int = 16): DataFrame = {
     require(bands >= 1 && 64 % bands == 0, "bands must divide 64")
     require(comboBands >= 1 && comboBands <= bands,
@@ -548,7 +547,6 @@ object Multimodal {
     require(maxHamming >= 0 && maxHamming <= bands - comboBands,
       s"recall guarantee needs maxHamming <= bands - comboBands " +
         s"($maxHamming > $bands - $comboBands)")
-    require(maxBandDf >= 1, "maxBandDf must be >= 1")
     require(saltHotDf >= 1 && saltBlocks >= 1,
       "saltHotDf and saltBlocks must be >= 1")
     val bandLen = 64 / bands
@@ -558,7 +556,7 @@ object Multimodal {
     // pair, where a per-character HOF compare is ~64 interpreted lambda
     // calls. On skewed hash distributions the band guarantee forces
     // candidate volume up and the postfilter IS the scan — it must be
-    // cheap. Two skew levers, both against Σ per-key f²:
+    // cheap. The skew lever against Σ per-key f²:
     //   * comboBands > 1 joins on every size-`comboBands` SUBSET of bands
     //     (C(bands, comboBands) keys per row, comboBands·bandLen-bit
     //     values) — still EXACT by pigeonhole: ≤ maxHamming damaged bands
@@ -567,13 +565,6 @@ object Multimodal {
     //     hashes: text-derived aHashes at sf0.1 measure Σf² 17.3M at
     //     comboBands=1 vs 6.2M at 2 (max key 1443 → 340), at 3.5× more
     //     (but tiny) exploded rows. Requires maxHamming ≤ bands−comboBands.
-    //   * maxBandDf drops key groups with > maxBandDf members before the
-    //     self-join — a hard cap on the worst key's f² for adversarial
-    //     distributions. NOT exact: a true pair is lost only if EVERY one
-    //     of its ≥ bands−maxHamming clean band keys (≥ C(clean,comboBands)
-    //     subset keys) is above the cap; each dropped key leaves all the
-    //     others as chances. Default off — prefer comboBands, which costs
-    //     no recall.
     // pack the hash into ONE 64-bit long, scan-local, via four 16-bit
     // conv() chunks shifted together (conv on the full 64-bit string would
     // overflow the signed-long cast when bit 0 is set) — the join and the
@@ -598,7 +589,7 @@ object Multimodal {
     // with post-join hash lookups was measured SLOWER here — the two
     // lookup joins recompute the decode→hash subplan, while the identical
     // x/y subplans below collapse into one reused exchange)
-    val needDf = maxBandDf != Int.MaxValue || saltHotDf != Int.MaxValue
+    val needDf = saltHotDf != Int.MaxValue
     // when df logic is live, persist the COMPACT pre-explode relation
     // (id, h, hl — n rows; the exploded band relation is combos× bigger):
     // the census action below materializes it, so the codec decode runs
@@ -627,17 +618,15 @@ object Multimodal {
     // corpus constant the unconditional salt cost (audit: 2.96→3.50 s
     // phash, 1.06→1.77 s audio at sf0.1), while hot corpora (×10: max df
     // 3445/15253) keep the full skew treatment.
-    val hotKeys = if (saltHotDf == Int.MaxValue) 0L
+    val hotKeys = if (!needDf) 0L
       else census.filter(col("bdf") > saltHotDf).count()
-    def withDf = banded0.join(broadcast(census), Seq("b", "bv"))
-      .filter(col("bdf") <= maxBandDf)
     def pairsOf(x: DataFrame, y: DataFrame, extra: Column) =
       x.as("x").join(y.as("y"),
           col("x.b") === col("y.b") && col("x.bv") === col("y.bv") &&
             extra && col("x.id") < col("y.id"))
         .select(col("x.id").as("a_id"), col("y.id").as("b_id"),
           col("x.hl").as("ah"), col("y.hl").as("bh"))
-    // third skew lever — the NON-LOSSY one: block-salting WITHIN hot band
+    // second skew lever: block-salting WITHIN hot band
     // keys. Keys whose df exceeds saltHotDf get their self-join spread
     // over `saltBlocks` reducer tasks: the left side keeps its one hashed
     // block (pmod(xxhash64(id), B)), the right side replicates to ALL B
@@ -651,12 +640,10 @@ object Multimodal {
     val cand = (if (hotKeys == 0L) {
         // no hot key anywhere: the salted plan and the plain plan are the
         // SAME pair set by the block argument above (the hot branch is
-        // empty), so take the cheap one. maxBandDf, when set, still
-        // applies through the broadcast census attach.
-        if (maxBandDf == Int.MaxValue) pairsOf(banded0, banded0, lit(true))
-        else pairsOf(withDf.drop("bdf"), withDf.drop("bdf"), lit(true))
+        // empty), so take the cheap one.
+        pairsOf(banded0, banded0, lit(true))
       } else {
-        val shared = withDf
+        val shared = banded0.join(broadcast(census), Seq("b", "bv"))
         val cold = shared.filter(col("bdf") <= saltHotDf)
         val hot = shared.filter(col("bdf") > saltHotDf).drop("bdf")
         val hx = hot.withColumn("blk",

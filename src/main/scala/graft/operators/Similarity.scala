@@ -123,19 +123,16 @@ object Similarity {
     * standard IVF trade — centroid count scales ~√n so cells stay
     * bounded, and multi-probe widens recall on the same plan. Assignment
     * is the scan-local plan-literal argmax of [[ivfAssign]]; everything
-    * downstream of scoring is byte-identical to the exact form. */
+    * downstream of scoring is byte-identical to the exact form. Building
+    * the result runs the assignment once and keeps it ([[Materialize]]). */
   def knnGraphIvf(corpus: DataFrame, idCol: Column, vecCol: Column,
-      centroids: DataFrame, k: Int,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    // materialize the assigned relation ONCE (same overridable policy knob
-    // as the Graph kernels: localCheckpoint local default, reliable
-    // checkpoint() for clusters, identity = pure lazy plan): both self-join
-    // sides reference it, and unmaterialized each side re-runs the
-    // O(n·c·dim) centroid-assignment scan — with c ≈ √n that is n^1.5 work
-    // paid twice (exchange reuse does not fire across the alias-renamed
-    // branches). NOTE: the default makes construction eager — pass
-    // `identity` when building plans for inspection only.
-    val a = materialize(ivfAssign(corpus, idCol, vecCol, centroids)
+      centroids: DataFrame, k: Int): DataFrame = {
+    // materialize the assigned relation ONCE ([[Materialize]], so building
+    // this DataFrame runs the assignment): both self-join sides reference
+    // it, and unmaterialized each side re-runs the O(n·c·dim)
+    // centroid-assignment scan — with c ≈ √n that is n^1.5 work paid twice
+    // (exchange reuse does not fire across the alias-renamed branches).
+    val a = Materialize(ivfAssign(corpus, idCol, vecCol, centroids)
       .withColumn("nrm", sqrt(dot(col("v"), col("v")))))
     val b = a.select(col("centroid_id").as("__qc"),
       col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -167,10 +164,10 @@ object Similarity {
     * the isotropic gate corpus whose top-k sits at the cosine noise floor,
     * with monotone recovery in p and EDGE-FOR-EDGE exactness at p = c
     * (structural, distribution-independent). The gated CORRECTNESS row
-    * replays the (√n, p = 3) configuration exactly in SQL. */
+    * replays the (√n, p = 3) configuration exactly in SQL. Building the
+    * result runs the assignment once and keeps it ([[Materialize]]). */
   def knnGraphIvfMultiprobe(corpus: DataFrame, idCol: Column, vecCol: Column,
-      centroids: DataFrame, k: Int, probes: Int,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      centroids: DataFrame, k: Int, probes: Int): DataFrame = {
     // ONE centroid-assignment pass serves BOTH join sides: the stored side
     // is probe_ids(0) ([[graft.functions.VecAlgos.topCentroids]] shares
     // [[ivfAssign]]'s exact total order — higher round(cos,6), ties to the
@@ -178,11 +175,10 @@ object Similarity {
     // side explodes the same array. Before, the stored side ran
     // NearestCentroidExpr and the query side TopCentroidsExpr — two full
     // O(n·c·dim) scans (n^1.5 each at c ≈ √n) of the same corpus, plus a
-    // per-exploded-row norm (3n dots instead of n). Materialized once
-    // (same policy knob as [[knnGraphIvf]]; identity = lazy plan for
-    // inspection), the join branches read the assigned relation instead of
-    // replaying it.
-    val ap = materialize(
+    // per-exploded-row norm (3n dots instead of n). Materialized once (as
+    // in [[knnGraphIvf]]), the join branches read the assigned relation
+    // instead of replaying it.
+    val ap = Materialize(
       ivfAssignProbes(corpus, idCol, vecCol, centroids, probes)
         .withColumn("nrm", sqrt(dot(col("v"), col("v")))))
     val a = ap.select(col("vec_id"), col("probe_ids")(0).as("centroid_id"),

@@ -59,33 +59,6 @@ class GraphSpec extends SparkTestBase {
     assert(r2.getLong(0) == 0L && r2.getLong(1) == 3L && r2.getLong(2) == 0L)
   }
 
-  test("checkpointEvery=0 returns a pure lazy plan with identical ranks " +
-      "and zero retained cache; materialize strategy is pluggable") {
-    val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L))
-      .toDF("src", "dst")
-    val eager = Graph.pageRank(edges, col("src"), col("dst"),
-        iterations = 3, scale = 1000000L)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val lazyDf = Graph.pageRank(edges, col("src"), col("dst"),
-      iterations = 3, scale = 1000000L, checkpointEvery = 0)
-    // nothing persisted or checkpointed by the lazy form — safe under
-    // executor churn on a real cluster (localCheckpoint is non-replayable)
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
-      "lazy mode must not persist anything")
-    assert(lazyDf.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-      == eager)
-    // a caller-supplied materializer (e.g. reliable checkpoint() on a
-    // cluster) is honored per cadence tick — count invocations
-    var calls = 0
-    val custom = Graph.pageRank(edges, col("src"), col("dst"),
-        iterations = 3, scale = 1000000L, checkpointEvery = 1,
-        materialize = df => { calls += 1; df.localCheckpoint() })
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    assert(custom == eager)
-    assert(calls == 3, s"2 in-loop ticks + 1 final, got $calls")
-  }
-
   test("maintainComponents: merges, attachments, new components — equals " +
       "recompute; replay is a no-op (the monotone IVM contract)") {
     import graft.operators.Dedup
@@ -125,50 +98,45 @@ class GraphSpec extends SparkTestBase {
 
   test("RELIABLE checkpoint() drives the iterative kernels: identical output, " +
       "lineage actually cut to checkpoint files") {
-    // the cluster-safety contract, exercised for real instead of asserted
-    // from the lazy-plan option: pageRank and bfsDistances run with
-    // `materialize = _.checkpoint()` against a configured checkpoint dir —
-    // the recoverable, executor-churn-safe strategy a 1000-executor job
-    // uses (localCheckpoint is non-replayable). Asserted: (1) outputs are
-    // bit-identical to the default strategy; (2) checkpoint FILES exist
-    // (the lineage was genuinely written to reliable storage, not just
-    // cached); (3) the checkpointed plan no longer references the
-    // iteration's shuffle lineage (its RDD debug string roots in a
-    // ReliableCheckpointRDD scan).
+    // the cluster-safety contract, exercised for real: with a checkpoint
+    // dir on the SparkContext (the deployment setting of a cluster that
+    // must survive executor loss — localCheckpoint blocks are
+    // non-replayable) pageRank and bfsDistances checkpoint reliably.
+    // Asserted: (1) outputs are bit-identical to the local path's; (2)
+    // checkpoint FILES exist; (3) the results' RDD lineage roots in a
+    // ReliableCheckpointRDD scan, where the local path's roots in a
+    // LocalCheckpointRDD.
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L))
+      .toDF("src", "dst")
+    val seeds = Seq(1L).toDF("v")
+    def pr = Graph.pageRank(edges, col("src"), col("dst"),
+      iterations = 4, scale = 1000000L)
+    def bfs = Graph.bfsDistances(edges, col("src"), col("dst"),
+      seeds, col("v"), maxRounds = 4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val prLocal = pr
+    val lineage = prLocal.rdd.toDebugString
+    assert(lineage.contains("LocalCheckpointRDD") &&
+      !lineage.contains("ReliableCheckpointRDD"), lineage)
+    val (prWant, bfsWant) = (rows(prLocal), rows(bfs))
     val ckDir = java.nio.file.Files.createTempDirectory("graft-ck").toString
-    val hadCk = Option(spark.sparkContext.getCheckpointDir.orNull)
     spark.sparkContext.setCheckpointDir(ckDir)
     try {
-      val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L))
-        .toDF("src", "dst")
-      val prDefault = Graph.pageRank(edges, col("src"), col("dst"),
-          iterations = 4, scale = 1000000L)
-        .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-      val prReliable = Graph.pageRank(edges, col("src"), col("dst"),
-        iterations = 4, scale = 1000000L, checkpointEvery = 2,
-        materialize = df => { val d = df.checkpoint(); d })
-      assert(prReliable.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-        == prDefault)
+      val prReliable = pr
+      assert(rows(prReliable) == prWant)
       assert(prReliable.rdd.toDebugString.contains("ReliableCheckpointRDD"),
         "reliable-checkpointed plan must root in checkpoint files")
-      val seeds = Seq(1L).toDF("v")
-      val bfsDefault = Graph.bfsDistances(edges, col("src"), col("dst"),
-          seeds, col("v"), maxRounds = 4)
-        .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-      val bfsReliable = Graph.bfsDistances(edges, col("src"), col("dst"),
-        seeds, col("v"), maxRounds = 4, checkpointEvery = 1,
-        materialize = _.checkpoint())
-      assert(bfsReliable.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-        == bfsDefault)
+      val bfsReliable = bfs
+      assert(rows(bfsReliable) == bfsWant)
+      assert(bfsReliable.rdd.toDebugString.contains("ReliableCheckpointRDD"))
       val written = new java.io.File(ckDir).listFiles()
       assert(written != null && written.nonEmpty,
         "checkpoint dir must hold written RDD state")
     } finally {
-      // unconditionally reset: restore the old dir when one was set,
-      // otherwise point at a fresh temp dir — leaving the session aimed
-      // at the deleted ckDir would break any later .checkpoint() caller
-      spark.sparkContext.setCheckpointDir(hadCk.getOrElse(
-        java.nio.file.Files.createTempDirectory("graphck-reset").toString))
+      // every later suite in this JVM must take the local path again
+      org.apache.spark.CheckpointDirs.unset(spark.sparkContext)
       try {
         import scala.reflect.io.Directory
         new Directory(new java.io.File(ckDir)).deleteRecursively(); ()
@@ -327,13 +295,13 @@ class GraphSpec extends SparkTestBase {
   }
 
   test("sssp: cheaper 2-hop path beats direct edge; round bound truncates; " +
-      "multi-source min; off-graph seeds ignored; lazy parity") {
+      "multi-source min; off-graph seeds ignored") {
     // 1→2 (10), 2→3 (10), 1→3 (50): true dist(3) = 20 via two hops
     val e = Seq((1L,2L,10L),(2L,3L,10L),(1L,3L,50L)).toDF("src","dst","w")
     val seed1 = Seq(1L).toDF("v")
-    def run(rounds: Int, seeds: org.apache.spark.sql.DataFrame, ce: Int = 1) =
+    def run(rounds: Int, seeds: org.apache.spark.sql.DataFrame) =
       Graph.sssp(e, col("src"), col("dst"), col("w"), seeds, col("v"),
-        maxRounds = rounds, checkpointEvery = ce)
+        maxRounds = rounds)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(run(2, seed1) == Map(1L -> 0L, 2L -> 10L, 3L -> 20L))
     // one round: only the direct relaxations
@@ -341,40 +309,40 @@ class GraphSpec extends SparkTestBase {
     // multi-source takes the min; seed 99 is off-graph and ignored
     val r = run(2, Seq(2L, 99L).toDF("v"))
     assert(r == Map(2L -> 0L, 3L -> 10L), s"$r")
-    assert(run(2, seed1, ce = 0) == run(2, seed1), "lazy parity")
   }
 
   test("neighborhoodFunction: hand-computed ball census on a path + " +
-      "triangle; saturates at component closure; lazy parity") {
+      "triangle; saturates at component closure") {
     // path 1-2-3-4 and triangle 7-8-9 (disjoint):
     // h=0: 7 singletons = 7
     // h=1: path balls 2,3,3,2 + triangle 3·3 = 10+9 = 19
     // h=2: path 3,4,4,3 + 9 = 23;  h=3: 4,4,4,4 + 9 = 25 (saturated)
     val e = Seq((1L,2L),(2L,3L),(3L,4L),(7L,8L),(8L,9L),(7L,9L))
       .toDF("src", "dst")
-    def run(ce: Int) = Graph.neighborhoodFunction(e, col("src"), col("dst"),
-        maxHops = 4, k = 64, checkpointEvery = ce)
+    val r = Graph.neighborhoodFunction(e, col("src"), col("dst"),
+        maxHops = 4, k = 64)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val r = run(1)
     assert(r == Map(0L -> 7L, 1L -> 19L, 2L -> 23L, 3L -> 25L, 4L -> 25L),
       s"$r")
-    assert(run(0) == r, "lazy (checkpointEvery=0) must match materialized")
   }
 
   test("hits: hand-computed 2-round scores on a bipartite graph; " +
-      "checkpointEvery=0 lazy plan is value-identical") {
+      "building it runs no job and persists nothing") {
     // custs 101,102 → parts 1,2,3: 101→{1,2}, 102→{2,3}
     // a1 = indeg = (1,2,1); h1 = (3,3); a2 = (3,6,3); h2 = (9,9)
     val e = Seq((101L,1L),(101L,2L),(102L,2L),(102L,3L)).toDF("src", "dst")
-    def run(ce: Int) = Graph.hits(e, col("src"), col("dst"),
-        rounds = 2, checkpointEvery = ce)
-      .collect().map(x => x.getLong(0) ->
-        ((x.getLong(1), x.getLong(2)))).toMap
-    val r = run(1)
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    var scores: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy {
+      scores = Graph.hits(e, col("src"), col("dst"), rounds = 2)
+    } == 0, "hits is one lazy plan")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached,
+      "hits must persist nothing")
+    val r = scores.collect().map(x => x.getLong(0) ->
+      ((x.getLong(1), x.getLong(2)))).toMap
     assert(r(1L) == ((3L, 0L)) && r(2L) == ((6L, 0L)) && r(3L) == ((3L, 0L)),
       s"$r")
     assert(r(101L) == ((0L, 9L)) && r(102L) == ((0L, 9L)), s"$r")
-    assert(run(0) == r, "lazy (checkpointEvery=0) must match materialized")
   }
 
   test("linkPredictRA: hand-computed scores on the square + diagonal " +

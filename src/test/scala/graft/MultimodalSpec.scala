@@ -362,50 +362,4 @@ class MultimodalSpec extends SparkTestBase {
       (2L, 0L, 2L, 3L),
       (4L, 0L, 0L, 1L)), s"got $got")
   }
-
-  test("phashNearDup maxBandDf: hot band keys are dropped — pair lost only " +
-      "when EVERY agreeing key is hot; others survive via remaining bands") {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Multimodal
-    val zeros = "0" * 64
-    def flip(bits: Int*): String =
-      zeros.zipWithIndex.map { case (c, i) => if (bits.contains(i)) '1' else c }.mkString
-    // 9 docs identical in every band (all-zeros) -> every band key has
-    // f=9; plus a pair (100,101) differing from the crowd in bands 0-5
-    // (one flip each) so their only agreeing keys are bands 6,7 — which
-    // the crowd also shares (f=11 there)
-    val crowd = (1L to 9L).map(i => i -> zeros)
-    val pairA = 100L -> flip(0, 8, 16, 24, 32, 40)
-    val pairB = 101L -> flip(1, 9, 17, 25, 33, 41)
-    val hashed = (crowd :+ pairA :+ pairB).toDF("doc_id", "ahash")
-    // uncapped: crowd pairs (36 of them, hd=0) + (100,101) at hd=12? no —
-    // hd(100,101)=12 > 6, NOT a true pair. crowd-to-100: hd=6 (true).
-    val uncapped = Multimodal.phashNearDup(hashed, col("doc_id"), col("ahash"),
-        maxHamming = 6, bands = 8)
-      .as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    // cap at 8: every (band, 00000000) key has f >= 9 (crowd) — all crowd
-    // keys dropped; crowd pairs and crowd-to-100/101 pairs all lost, and
-    // nothing else agrees on any key -> empty. The documented bound: a
-    // pair is lost only when every one of its agreeing keys is hot.
-    val capped = Multimodal.phashNearDup(hashed, col("doc_id"), col("ahash"),
-        maxHamming = 6, bands = 8, maxBandDf = 8)
-      .as[(Long, Long, Int)].collect()
-    assert(uncapped.nonEmpty)
-    assert(capped.isEmpty, s"all agreeing keys hot -> dropped: ${capped.toSeq}")
-    // cap at 10: bands 0-5 zero-keys (f=9, crowd only) survive, bands 6-7
-    // (f=11: crowd + docs 100,101) dropped — crowd pairs survive via their
-    // six remaining band chances; crowd-to-100/101 pairs (agreeing ONLY on
-    // the two hot keys) are the graceful-degradation loss
-    val mid = Multimodal.phashNearDup(hashed, col("doc_id"), col("ahash"),
-        maxHamming = 6, bands = 8, maxBandDf = 10)
-      .as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    val crowdPairs = uncapped.filter { case ((a, b), _) => b <= 9L }
-    assert(mid == crowdPairs,
-      s"crowd pairs survive via cold bands, hot-only pairs drop: $mid")
-    // cap above the crowd size binds nothing: identical to uncapped
-    val loose = Multimodal.phashNearDup(hashed, col("doc_id"), col("ahash"),
-        maxHamming = 6, bands = 8, maxBandDf = 64)
-      .as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    assert(loose == uncapped)
-  }
 }

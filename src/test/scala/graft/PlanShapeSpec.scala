@@ -7,8 +7,8 @@ package graft
 class PlanShapeSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
-  // NOTE: queries built on kernels whose `materialize` knob defaults to
-  // localCheckpoint run those upstream jobs EAGERLY at construction — for
+  // NOTE: queries built on kernels that materialize (graft.operators.
+  // Materialize) run those upstream jobs EAGERLY at construction — for
   // them this helper is an execution test of the checkpointed stages, not
   // a pure planning test, and the returned plan shows the checkpoint scan
   // in place of the upstream algebra (assert invariants like "no parquet
@@ -191,11 +191,23 @@ class PlanShapeSpec extends SparkTestBase {
     // it at runtime once the node-sized side measures small)
     assert("SortMergeJoin [^\\n]*w[12]".r.findFirstIn(p).isEmpty,
       s"scored stream must never shuffle-join on a token key:\n${p.take(2000)}")
-    // allowed caches are MODEL-sized only: c2 (distinct corpus bigrams,
-    // Heaps-sublinear) + the vocab-sized uni rollup — never the corpus
-    // occurrence stream
-    val imrs = "InMemoryTableScan".r.findAllIn(p).size
-    assert(imrs <= 4, s"only the model caches may materialize (saw $imrs):\n${p.take(2000)}")
+    // allowed caches are MODEL-sized only: c2 (w1, w2, c2: distinct corpus
+    // bigrams, Heaps-sublinear) and the vocab-sized uni rollup (w1, c1, v,
+    // gid) — never a relation keyed by document (doc_id) or holding the
+    // corpus token stream
+    val exec = q.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.inputPlan
+      case other => other
+    }
+    val cached = exec.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        s.relation.output.map(_.name).toSet
+    }
+    assert(cached.nonEmpty, s"the model must be cached:\n${p.take(2000)}")
+    val modelCols = Set("w1", "w2", "c2", "c1", "v", "gid")
+    assert(cached.forall(_.subsetOf(modelCols)),
+      s"only model-sized relations may be cached, saw ${cached.distinct}:\n${p.take(2000)}")
     spark.sharedState.cacheManager.clearCache()
   }
 
@@ -537,23 +549,22 @@ class PlanShapeSpec extends SparkTestBase {
       s"multiprobe kNN must equi-join on the cell:\n$p")
     // round-12: the gated plan materializes ONE assignment pass (the
     // kernel hides behind its checkpoint scan), so the top_centroids pin
-    // moves to the construction relation — built here with the lazy knob
+    // moves to the assignment relation itself
     import org.apache.spark.sql.functions.col
     val emb = SparkEntry.t(spark, dir, "embeddings")
     val cts = emb.filter(col("vec_id") % 7 === 0)
       .select(col("vec_id").as("centroid_id"),
         graft.operators.Similarity.asDouble(col("embedding")).as("cvec"))
-    val cp = graft.operators.Similarity.knnGraphIvfMultiprobe(
-        emb, col("vec_id"), col("embedding"), cts, k = 5, probes = 3,
-        materialize = identity)
+    val cp = graft.operators.Similarity.ivfAssignProbes(
+        emb, col("vec_id"), col("embedding"), cts, 3)
       .queryExecution.executedPlan.toString
     assert(cp.contains("top_centroids"),
       s"probe assignment must be the scan-local plan-literal kernel:\n$cp")
     // and exactly ONE assignment kernel feeds both join sides: the stored
     // side must be probe_ids[0] of the SAME pass, never a second
     // nearest_centroid scan
-    assert(!cp.contains("nearest_centroid"),
-      s"stored side must reuse the top_centroids pass (probe_ids[0]):\n$cp")
+    assert(!p.contains("nearest_centroid"),
+      s"stored side must reuse the top_centroids pass (probe_ids[0]):\n$p")
     spark.sharedState.cacheManager.clearCache()
   }
 
