@@ -709,11 +709,10 @@ object Dedup {
                     blocks: Int = 1): DataFrame = {
     require(blocks >= 0, "blocks must be >= 0 (0 = default)")
     val b = blocks.max(1)
-    // materialize the assigned relation ONCE ([[Materialize]], so building
-    // this DataFrame runs the assignment): it feeds both pair-join sides
-    // AND the final kept-flag join — unmaterialized, each of the three
-    // references replays the O(n·c·dim) assignment scan (n^1.5 at the
-    // derived c ≈ √n).
+    // materialize the assigned relation ONCE: it feeds both pair-join
+    // sides AND the final kept-flag join — unmaterialized, each of the
+    // three references replays the O(n·c·dim) assignment scan (n^1.5 at
+    // the derived c ≈ √n).
     val assigned = Materialize(Similarity.ivfAssign(df, idCol, vecCol, centroids)
       .withColumn("__sd_n", sqrt(Similarity.dot(col("v"), col("v")))))
     val right = assigned.select(col("centroid_id"), col("vec_id").as("__sd_bid"),

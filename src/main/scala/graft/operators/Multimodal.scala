@@ -556,7 +556,7 @@ object Multimodal {
     // pair, where a per-character HOF compare is ~64 interpreted lambda
     // calls. On skewed hash distributions the band guarantee forces
     // candidate volume up and the postfilter IS the scan — it must be
-    // cheap. The skew lever against Σ per-key f²:
+    // cheap. Two skew levers work against Σ per-key f²; the first:
     //   * comboBands > 1 joins on every size-`comboBands` SUBSET of bands
     //     (C(bands, comboBands) keys per row, comboBands·bandLen-bit
     //     values) — still EXACT by pigeonhole: ≤ maxHamming damaged bands
@@ -626,10 +626,10 @@ object Multimodal {
             extra && col("x.id") < col("y.id"))
         .select(col("x.id").as("a_id"), col("y.id").as("b_id"),
           col("x.hl").as("ah"), col("y.hl").as("bh"))
-    // second skew lever: block-salting WITHIN hot band
-    // keys. Keys whose df exceeds saltHotDf get their self-join spread
-    // over `saltBlocks` reducer tasks: the left side keeps its one hashed
-    // block (pmod(xxhash64(id), B)), the right side replicates to ALL B
+    // second skew lever: block-salting WITHIN hot band keys. Keys whose
+    // df exceeds saltHotDf get their self-join spread over `saltBlocks`
+    // reducer tasks: the left side keeps its one hashed block
+    // (pmod(xxhash64(id), B)), the right side replicates to ALL B
     // blocks, and the join adds blk to the key — pair {p, q} (p < q)
     // still meets EXACTLY once per shared key (at p's block, where q's
     // replica is), so the pair set is provably identical to the unsalted

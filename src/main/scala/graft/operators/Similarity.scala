@@ -127,9 +127,8 @@ object Similarity {
     * the result runs the assignment once and keeps it ([[Materialize]]). */
   def knnGraphIvf(corpus: DataFrame, idCol: Column, vecCol: Column,
       centroids: DataFrame, k: Int): DataFrame = {
-    // materialize the assigned relation ONCE ([[Materialize]], so building
-    // this DataFrame runs the assignment): both self-join sides reference
-    // it, and unmaterialized each side re-runs the O(n·c·dim)
+    // materialize the assigned relation ONCE: both self-join sides
+    // reference it, and unmaterialized each side re-runs the O(n·c·dim)
     // centroid-assignment scan — with c ≈ √n that is n^1.5 work paid twice
     // (exchange reuse does not fire across the alias-renamed branches).
     val a = Materialize(ivfAssign(corpus, idCol, vecCol, centroids)
