@@ -3084,15 +3084,21 @@ object SparkEntry {
     }),
 
     "dedup_incremental_lsh" -> ((s, d) => {
-      // incremental NEAR-dup (the daily-crawl shape): the new batch signs
-      // only itself, probes the standing band index, exact-verifies — the
-      // corpus is never re-paired. Output = all batch-touching near-dup
-      // pairs; oracle = all-pairs Jaccard restricted to batch-touching.
+      // incremental NEAR-dup (the daily-crawl shape): the standing corpus
+      // is indexed (band rows + shingle sets), and the new batch signs only
+      // itself, probes that index, exact-verifies — the corpus is never
+      // re-paired. The same build + probe the stored-index queries run,
+      // with the index held in memory instead of written as a table.
+      // Output = all batch-touching near-dup pairs; oracle = all-pairs
+      // Jaccard restricted to batch-touching.
       val docs = t(s, d, "documents")
-      Dedup.minhashNearDupIncremental(
-        docs.filter(col("doc_id") < 250), docs.filter(col("doc_id") >= 250),
-        col("doc_id"), col("text"),
-        n = 3, numHashes = 64, bands = 16, thresholdPpm = 800000L)
+      val (bands, sets) = Dedup.lshIndexBuild(docs.filter(col("doc_id") < 250),
+        col("doc_id"), col("text"), n = 3, numHashes = 64, bands = 16)
+      val (pairs, _, _) = Dedup.lshProbeAppend(bands, sets,
+        docs.filter(col("doc_id") >= 250),
+        col("doc_id"), col("text"), n = 3, numHashes = 64, bands = 16,
+        thresholdPpm = 800000L)
+      pairs
     }),
 
     "dedup_lsh_stored" -> ((s, d) => {

@@ -94,10 +94,33 @@ object Dedup {
 
   /** Jaccard in parts-per-million as an exact integer (floor of the scaled
     * float quotient — bit-identical across engines since both operands and
-    * the division are the same IEEE doubles; no rounding-mode divergence). */
+    * the division are the same IEEE doubles; no rounding-mode divergence).
+    * The all-pairs reference [[ngramJaccardPairs]] scores with it; the
+    * bucketed verifiers score with [[setJaccard]]'s integer form, which
+    * gives the same ppm for every set size below 2³³. */
   def jaccardPpm(aSh: Column, bSh: Column): Column =
     floor(size(array_intersect(aSh, bSh)).cast("double") * lit(1000000.0d) /
       size(array_union(aSh, bSh))).cast("long")
+
+  /** The exact set-Jaccard step every bucketed verifier ends in: attach
+    * each pair side's DISTINCT set and its BIGINT size from `sets` (id,
+    * set, size columns named by the caller), take i = |A∩B| and
+    * u = |A| + |B| − i (the union size of distinct sets, with no second
+    * array built), score ppm = (i·10⁶) div u in integers (a double
+    * quotient can round up across an integer boundary and shift a floor),
+    * and keep ppm ≥ t. Returns (a_id, b_id, n_common, n_union,
+    * jaccard_ppm), all BIGINT. */
+  private def setJaccard(cands: DataFrame, sets: DataFrame, idCol: String,
+      setCol: String, sizeCol: String, thresholdPpm: Long): DataFrame = {
+    def side(p: String) = sets.select(col(idCol).as(s"${p}_id"),
+      col(setCol).as(s"${p}_set"), col(sizeCol).as(s"${p}_n"))
+    cands.join(side("a"), "a_id").join(side("b"), "b_id")
+      .withColumn("n_common", size(array_intersect(col("a_set"), col("b_set"))).cast("long"))
+      .withColumn("n_union", col("a_n") + col("b_n") - col("n_common"))
+      .withColumn("jaccard_ppm", expr("(n_common * 1000000L) div n_union"))
+      .filter(col("jaccard_ppm") >= thresholdPpm)
+      .select("a_id", "b_id", "n_common", "n_union", "jaccard_ppm")
+  }
 
   /** Exact Jaccard verification of candidate pairs against the shingle sets
     * — the standard LSH postfilter killing false positives. Two exactness-
@@ -109,15 +132,17 @@ object Dedup {
     *    ships through a shuffle — provably no true pair lost;
     *  - the surviving intersections run over 64-bit-hashed shingle sets
     *    (distinct strings → distinct hashes at ~1e-13/pair collision odds),
-    *    long equality being several× cheaper than UTF8 string equality. */
+    *    long equality being several× cheaper than UTF8 string equality.
+    * The score itself is [[setJaccard]]. */
   def jaccardVerify(cands: DataFrame, docsWithShingles: DataFrame, idCol: String, shCol: String,
                     thresholdPpm: Long): DataFrame = {
     // sizes come from the DISTINCT hashed set — the same sets the Jaccard
     // runs on — so the ratio bound holds for ANY input, duplicated shingle
-    // arrays included (raw sizes would over-prune docs with repeats)
+    // arrays included (raw sizes would over-prune docs with repeats), and
+    // |A|+|B|−|A∩B| is their exact union size
     val hashed = docsWithShingles.select(col(idCol),
       array_distinct(transform(col(shCol), s => xxhash64(s))).as("__hs"))
-      .withColumn("__n", size(col("__hs")))
+      .withColumn("__n", size(col("__hs")).cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val aN = hashed.select(col(idCol).as("a_id"), col("__n").as("a_n"))
     val bN = hashed.select(col(idCol).as("b_id"), col("__n").as("b_n"))
@@ -125,17 +150,15 @@ object Dedup {
       .filter(least(col("a_n"), col("b_n")).cast("double") * lit(1000000.0d) /
         greatest(col("a_n"), col("b_n")) >= thresholdPpm)
       .select("a_id", "b_id")
-    val a = hashed.select(col(idCol).as("a_id"), col("__hs").as("a_sh"))
-    val b = hashed.select(col(idCol).as("b_id"), col("__hs").as("b_sh"))
-    pruned.join(a, "a_id").join(b, "b_id")
-      .withColumn("jaccard_ppm", jaccardPpm(col("a_sh"), col("b_sh")))
-      .filter(col("jaccard_ppm") >= thresholdPpm)
+    setJaccard(pruned, hashed, idCol, "__hs", "__n", thresholdPpm)
       .select("a_id", "b_id", "jaccard_ppm")
   }
 
   /** All-pairs n-gram Jaccard above a threshold — the exact (quadratic)
     * formulation, used as the correctness oracle for LSH and directly when
-    * one side is small enough to broadcast. */
+    * one side is small enough to broadcast. It keeps its own shingle build
+    * and float-quotient score ([[jaccardPpm]]) so the bucketed kernels are
+    * checked against code they do not share. */
   def ngramJaccardPairs(df: DataFrame, idCol: Column, textCol: Column, n: Int, thresholdPpm: Long): DataFrame = {
     val docs = tokenized(df, idCol, textCol)
       .select(col("id"), shinglesOfTokens(col("__toks"), n).as("sh"))
@@ -159,13 +182,10 @@ object Dedup {
     * hash to 64-bit (one codegen'd [[spanHashes]] pass), postings
     * self-join on the gram hash, intersection sizes fall out of ONE
     * count aggregation, and set sizes ride the posting rows so no second
-    * join is needed. Pair volume is Σ_g df(g)² — at corpus scale
-    * ubiquitous boilerplate grams dominate that sum while carrying no
-    * discriminative signal, so `maxDf > 0` drops grams appearing in more
-    * than maxDf docs (the standard postings-pruning trade; changes output
-    * only for pairs whose overlap is mostly ubiquitous grams). Default 0
-    * keeps the oracle-exact form. Size-ratio pruning is deliberately NOT
-    * applied: unequal sizes are the point of containment.
+    * join is needed. Pair volume is Σ_g df(g)², so ubiquitous boilerplate
+    * grams dominate it at corpus scale; the output stays exact regardless.
+    * Size-ratio pruning is deliberately NOT applied: unequal sizes are the
+    * point of containment.
     *
     * Measured ×10 (SCALE.md): wall grows ~97× — but on that fixture the
     * TRUE pair count itself grows ~100× (near-dup clusters deepen 10×),
@@ -174,30 +194,23 @@ object Dedup {
     * exactness-preserving upgrade is prefix filtering from the
     * set-similarity-join literature (index only each doc's (1−t)·|S|+1
     * globally-rarest grams; pigeonhole guarantees no pair ≥ t is lost —
-    * Chaudhuri et al. ICDE '06, Xiao et al. WWW '08), which `maxDf`
-    * approximates without the df-sort. */
+    * Chaudhuri et al. ICDE '06, Xiao et al. WWW '08), the shape
+    * [[jaccardJoin]] already runs for symmetric Jaccard. */
   def containmentPairs(df: DataFrame, idCol: Column, textCol: Column, n: Int,
-                       thresholdPpm: Long, maxDf: Long = 0L): DataFrame = {
+                       thresholdPpm: Long): DataFrame = {
     // persist the hashed gram sets (the minhashNearDupPairs posture): the
-    // posting relation feeds BOTH sides of the self-join (plus the hot-gram
-    // census when maxDf > 0), and without the persist the tokenize +
-    // spanHashes pipeline re-executes once per reference (measured
-    // 3.0 → 2.0 s at sf0.1). The explode per consumer is narrow and cheap;
-    // the compact pre-explode relation is what's worth caching.
+    // posting relation feeds BOTH sides of the self-join, and without the
+    // persist the tokenize + spanHashes pipeline re-executes once per
+    // reference (measured 3.0 → 2.0 s at sf0.1). The explode per consumer
+    // is narrow and cheap; the compact pre-explode relation is what's
+    // worth caching.
     // CACHE LIFECYCLE (documented leak): no unpersist — see jaccardJoin's
     // note; callers composing many queries clear the cache between them.
     val docs = tokenized(df, idCol, textCol)
       .select(col("id"), array_distinct(spanHashes(col("__toks"), n)).as("gh"))
       .withColumn("sz", size(col("gh")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val grams0 = docs.select(col("id"), col("sz"), explode(col("gh")).as("g"))
-    val grams =
-      if (maxDf <= 0) grams0
-      else {
-        val hot = grams0.groupBy("g").agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDf).select("g")
-        grams0.join(broadcast(hot), Seq("g"), "left_anti")
-      }
+    val grams = docs.select(col("id"), col("sz"), explode(col("gh")).as("g"))
     grams.select(col("g"), col("id").as("a_id"), col("sz").as("a_sz"))
       .join(grams.select(col("g"), col("id").as("b_id"), col("sz").as("b_sz")), "g")
       .filter(col("a_id") < col("b_id"))
@@ -209,6 +222,26 @@ object Dedup {
       .select("a_id", "b_id", "containment_ppm")
   }
 
+  /** (id, sh): each document's distinct word n-gram shingle set, built
+    * behind the [[tokenized]] barrier — the one set definition the MinHash
+    * and simhash kernels band on and verify against. */
+  private def shingleSets(df: DataFrame, idCol: Column, textCol: Column, n: Int): DataFrame =
+    tokenized(df, idCol, textCol)
+      .select(col("id"), shinglesOfTokens(col("__toks"), n).as("sh"))
+
+  /** (id, sh, sig): [[shingleSets]] plus the `numHashes`-long MinHash
+    * signature of each set. */
+  private def signedSets(df: DataFrame, idCol: Column, textCol: Column, n: Int,
+      numHashes: Int): DataFrame =
+    shingleSets(df, idCol, textCol, n).withColumn("sig", minhashSignature(col("sh"), numHashes))
+
+  /** The band rows of [[signedSets]] output, `numHashes / bands` signature
+    * rows per band. */
+  private def signedBands(signed: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must divide into bands evenly")
+    lshBands(signed, col("id"), col("sig"), bands, numHashes / bands)
+  }
+
   /** Full MinHash+LSH near-dup pipeline: shingle → signature → band-bucket →
     * candidate join → exact verify. The only quadratic work happens inside
     * LSH buckets (expected O(1) sizes); everything else is linear scans plus
@@ -216,93 +249,29 @@ object Dedup {
     * [[ngramJaccardPairs]]. */
   def minhashNearDupPairs(df: DataFrame, idCol: Column, textCol: Column, n: Int,
                           numHashes: Int, bands: Int, thresholdPpm: Long): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands evenly")
-    val rows = numHashes / bands
     // Persist the signed docs: they feed both LSH-join sides and the verify
     // join — without it the shingle+signature build (the expensive narrow
     // stage) re-executes once per consumer. At 100 TB this persist becomes a
     // checkpoint to storage; the shape is the same.
-    val docs = tokenized(df, idCol, textCol)
-      .select(col("id"), shinglesOfTokens(col("__toks"), n).as("sh"))
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
+    val docs = signedSets(df, idCol, textCol, n, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bandsDf = lshBands(docs, col("id"), col("sig"), bands, rows)
+    val bandsDf = signedBands(docs, numHashes, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cands = lshCandidates(bandsDf)
     jaccardVerify(cands, docs, "id", "sh", thresholdPpm)
   }
 
-  /** INCREMENTAL MinHash+LSH near-dup: new-batch pairs only, against a
-    * standing index — the daily-crawl shape of [[minhashNearDupPairs]].
-    * The corpus's band rows and shingle sets are a stored index (here
-    * recomputed from `indexDocs`; in production they persist as bucketed
-    * tables and the batch's rows APPEND to them); each batch signs only
-    * its own docs, probes the band index, and exact-verifies the
-    * candidates. Emitted pairs have at least one batch side — the full
-    * pair set is the stored pairs ∪ this output, so the corpus is never
-    * re-paired: per batch the work is O(batch bands ⋈ matching buckets),
-    * not O(corpus²) and not even O(corpus). Same recall argument as the
-    * batch form (identical bands/threshold); output ≡ the all-pairs
-    * result restricted to batch-touching pairs, which is the oracle gate
-    * (`dedup_incremental_lsh`). */
-  def minhashNearDupIncremental(indexDocs: DataFrame, batchDocs: DataFrame,
-                                idCol: Column, textCol: Column, n: Int,
-                                numHashes: Int, bands: Int, thresholdPpm: Long): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands evenly")
-    val rows = numHashes / bands
-    def signed(df: DataFrame) = tokenized(df, idCol, textCol)
-      .select(col("id"), shinglesOfTokens(col("__toks"), n).as("sh"))
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
-    // Persist lifecycle is caller-managed (the [[minhashNearDupPairs]]
-    // posture): both signed sides feed the band build AND the verify join,
-    // so without the persist the shingle+signature stage re-executes per
-    // consumer. In a long-lived per-batch loop, clear the cache between
-    // batches (Verify/Bench do) or swap the persist for a checkpoint to
-    // storage — at 100 TB the index side IS a stored table and only `neu`
-    // is cached, at batch size.
-    val idx = signed(indexDocs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val neu = signed(batchDocs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idxBands = lshBands(idx, col("id"), col("sig"), bands, rows)
-    val newBands = lshBands(neu, col("id"), col("sig"), bands, rows)
-    // probe side = batch only; build side = index ∪ batch (batch-batch
-    // pairs must surface too). Normalize to a<b before dedup so a pair
-    // seen from both directions collapses.
-    val probe = newBands.select(col("band_id"), col("band_hash"), col("doc_id").as("p_id"))
-    val build = idxBands.unionByName(newBands)
-      .select(col("band_id"), col("band_hash"), col("doc_id").as("q_id"))
-    val cands = probe.join(build, Seq("band_id", "band_hash"))
-      .filter(col("p_id") =!= col("q_id"))
-      .select(least(col("p_id"), col("q_id")).as("a_id"),
-        greatest(col("p_id"), col("q_id")).as("b_id"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // verify ONLY candidate-touched docs (the lshProbeAppend round-12
-    // restriction): jaccardVerify re-hashes and persists whatever relation
-    // it is given, and candidates are batch-scale while idx ∪ neu is
-    // corpus-scale — the semi-join broadcasts the batch-sized id set and
-    // the pair output is provably unchanged (both sides of every candidate
-    // pair survive)
-    val touched = cands.select(col("a_id").as("id"))
-      .unionByName(cands.select(col("b_id").as("id"))).distinct()
-    val verifySets = idx.unionByName(neu)
-      .join(broadcast(touched), Seq("id"), "left_semi")
-    jaccardVerify(cands, verifySets, "id", "sh", thresholdPpm)
-  }
-
   /** Build the STORED form of the MinHash-LSH index: the band rows (the
-    * probe side) and the hashed shingle sets (the verify side) — exactly
-    * the two relations [[minhashNearDupIncremental]] recomputes from
-    * `indexDocs` per batch, materialized once instead. Returns
-    * (bands: doc_id, band_id, band_hash; sets: id, sh). */
+    * probe side) and the shingle sets (the verify side). Returns
+    * (bands: doc_id, band_id, band_hash; sets: id, sh). Incremental
+    * near-dup — new-batch pairs only, against a standing corpus — is this
+    * build over the corpus followed by one [[lshProbeAppend]] of the
+    * batch, whether the index lives in memory or as a stored table
+    * ([[writeLshIndex]]). */
   def lshIndexBuild(docs: DataFrame, idCol: Column, textCol: Column,
       n: Int, numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "numHashes must divide into bands evenly")
-    val rows = numHashes / bands
-    val signed = tokenized(docs, idCol, textCol)
-      .select(col("id"), shinglesOfTokens(col("__toks"), n).as("sh"))
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
-    (lshBands(signed, col("id"), col("sig"), bands, rows),
-      signed.select(col("id"), col("sh")))
+    val signed = signedSets(docs, idCol, textCol, n, numHashes)
+    (signedBands(signed, numHashes, bands), signed.select(col("id"), col("sh")))
   }
 
   /** Persist an LSH index as a VERSIONED stored table
@@ -332,12 +301,23 @@ object Dedup {
     * (a corpus×batch pair belongs to the batch's generation), so chaining
     * generations yields exactly the all-pairs result restricted to
     * new-doc-touching pairs — the oracle gate — while the standing corpus
-    * is never re-signed and never re-paired. */
+    * is never re-signed and never re-paired. Per batch the work is
+    * O(batch bands ⋈ matching buckets), not O(corpus²) and not O(corpus).
+    * Recall is the batch form's ([[minhashNearDupPairs]], identical
+    * bands and threshold). */
   def lshProbeAppend(storedBands: DataFrame, storedSets: DataFrame,
       batchDocs: DataFrame, idCol: Column, textCol: Column,
       n: Int, numHashes: Int, bands: Int, thresholdPpm: Long)
       : (DataFrame, DataFrame, DataFrame) = {
-    val (newBands, newSets) = lshIndexBuild(batchDocs, idCol, textCol, n, numHashes, bands)
+    // the batch signs ONCE: its signed rows feed the probe side, the build
+    // side and the verify sets, and without the persist the shingle +
+    // signature stage re-executes per consumer. Batch-sized; the lifecycle
+    // is caller-managed (Verify/Bench clear the cache between queries, a
+    // long-lived per-batch loop clears it between batches).
+    val signed = signedSets(batchDocs, idCol, textCol, n, numHashes)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val newBands = signedBands(signed, numHashes, bands)
+    val newSets = signed.select(col("id"), col("sh"))
     val probe = newBands.select(col("band_id"), col("band_hash"), col("doc_id").as("p_id"))
     val build = storedBands.unionByName(newBands)
       .select(col("band_id"), col("band_hash"), col("doc_id").as("q_id"))
@@ -399,20 +379,24 @@ object Dedup {
       GraftBridge.toExpr(split(Text.normalized(text), " "))))
   }
 
+  /** (id, sig, band_id, band_hash): each 64-bit simhash `sig` cut into
+    * four 16-bit band values, one row per band. */
+  private def simhashBands(docs: DataFrame): DataFrame =
+    docs.select(col("id"), col("sig"), explode(array((0 until 4).map(b =>
+        struct(lit(b).as("band_id"),
+          shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)).as("band_hash"))): _*)).as("band"))
+      .select(col("id"), col("sig"), col("band.band_id"), col("band.band_hash"))
+
   /** Banded SimHash near-dup: bucket by 16-bit signature bands (any shared
     * band → candidate), verify by Hamming distance — the scale path that
     * replaces the all-pairs cross join. */
   def simhashNearDupPairs(df: DataFrame, idCol: Column, textCol: Column, maxHamming: Int): DataFrame = {
     val docs = df.select(idCol.as("id"), simhash(textCol).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = docs.select(col("id"), col("sig"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band_id"),
-          shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)).as("band_val"))): _*)).as("band"))
-      .select(col("id"), col("sig"), col("band.band_id"), col("band.band_val"))
-    val l = banded.select(col("band_id"), col("band_val"), col("id").as("a_id"), col("sig").as("a_sig"))
-    val r = banded.select(col("band_id"), col("band_val"), col("id").as("b_id"), col("sig").as("b_sig"))
-    l.join(r, Seq("band_id", "band_val")).filter(col("a_id") < col("b_id"))
+    val banded = simhashBands(docs)
+    val l = banded.select(col("band_id"), col("band_hash"), col("id").as("a_id"), col("sig").as("a_sig"))
+    val r = banded.select(col("band_id"), col("band_hash"), col("id").as("b_id"), col("sig").as("b_sig"))
+    l.join(r, Seq("band_id", "band_hash")).filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
         bit_count(col("a_sig").bitwiseXOR(col("b_sig"))).as("hamming")).distinct()
       .filter(col("hamming") <= maxHamming)
@@ -435,6 +419,11 @@ object Dedup {
     GraftBridge.toCol(graft.functions.SimHash64Expr(GraftBridge.toExpr(features)))
   }
 
+  /** The MinHash backstop of [[simhashVerifiedPairs]]: 64 hashes in 16
+    * bands of 4 rows, the `dedup_minhash_lsh` configuration. */
+  private val BackstopHashes = 64
+  private val BackstopBands = 16
+
   /** SimHash-bucketed near-dup with EXACT n-gram-Jaccard verification: the
     * oracle-comparable form, built as a two-generator ensemble:
     *
@@ -448,7 +437,8 @@ object Dedup {
     *     Hamming distance 7 is GUARANTEED to collide (pigeonhole: ≤7
     *     errors over 4 bands leaves some band with ≤1 — covered by a
     *     1-flip probe).
-    *  2. MinHash bands (same generator [[minhashNearDupPairs]] trusts)
+    *  2. MinHash bands (same generator [[minhashNearDupPairs]] trusts,
+    *     64 hashes in 16 bands)
     *     backstop the statistically weak tail: short documents at J ≥ 0.8
     *     can sit at Hamming 8-12 (few shingles → high sign variance), and
     *     a Jaccard-calibrated generator catches exactly those (miss odds
@@ -459,19 +449,12 @@ object Dedup {
     * [[ngramJaccardPairs]] at a fraction of its cost, and the shape holds
     * at 100 TB where any coarse-bucket or all-pairs formulation dies. */
   def simhashVerifiedPairs(df: DataFrame, idCol: Column, textCol: Column, n: Int,
-                           thresholdPpm: Long, minhashHashes: Int = 64,
-                           minhashBands: Int = 16): DataFrame = {
-    val docs = tokenized(df, idCol, textCol)
-      .select(col("id"), shinglesOfTokens(col("__toks"), n).as("sh"))
+                           thresholdPpm: Long): DataFrame = {
+    val docs = shingleSets(df, idCol, textCol, n)
       .withColumn("sig", simhashOfFeatures(col("sh")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // generator 1: simhash 16-bit bands, 1-bit multiprobe on one join side
-    val bandStructs = (0 until 4).map { b =>
-      struct(lit(b).as("band_id"),
-        shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)).as("band_hash"))
-    }
-    val exact = docs.select(col("id"), col("sig"), explode(array(bandStructs: _*)).as("band"))
-      .select(col("id"), col("sig"), col("band.band_id"), col("band.band_hash"))
+    val exact = simhashBands(docs)
     val probes = exact.select(col("id"), col("sig"), col("band_id"),
       explode(array((struct(col("band_hash").as("h"), lit(false).as("flipped")) +:
         (0 until 16).map(bit =>
@@ -500,13 +483,28 @@ object Dedup {
         bit_count(col("a_sig").bitwiseXOR(col("b_sig"))) <= 7)
       .select(least(col("a_id"), col("b_id")).as("a_id"),
         greatest(col("a_id"), col("b_id")).as("b_id"))
-    // generator 2: minhash bands over the same shingle sets
-    val rows = minhashHashes / minhashBands
-    val signed = docs.withColumn("msig", minhashSignature(col("sh"), minhashHashes))
-    val minhashCands = lshCandidates(
-      lshBands(signed, col("id"), col("msig"), minhashBands, rows))
+    // generator 2: minhash bands over the same shingle sets (the MinHash
+    // signature takes the simhash's place as `sig` on this branch only)
+    val signed = docs.withColumn("sig", minhashSignature(col("sh"), BackstopHashes))
+    val minhashCands = lshCandidates(signedBands(signed, BackstopHashes, BackstopBands))
     jaccardVerify(simhashCands.unionByName(minhashCands).distinct(),
       docs, "id", "sh", thresholdPpm)
+  }
+
+  /** (doc_id, ord, chunk): each document cut into consecutive
+    * `chunkTokens`-token chunks (the last one may be shorter), numbered
+    * from 0 in document order. */
+  private def tokenChunks(df: DataFrame, idCol: Column, textCol: Column,
+      chunkTokens: Int): DataFrame = {
+    require(chunkTokens > 0, "chunkTokens must be positive")
+    val toks = col("__toks") // materialized attribute — see shingles() trap note
+    val nChunks = ceil(size(toks).cast("double") / chunkTokens).cast("int")
+    val chunkArr = transform(sequence(lit(0), nChunks - 1), i =>
+      struct(i.as("ord"),
+        array_join(slice(toks, i * chunkTokens + 1, lit(chunkTokens)), " ").as("chunk")))
+    tokenized(df, idCol, textCol)
+      .select(col("id").as("doc_id"), explode(chunkArr).as("c"))
+      .select(col("doc_id"), col("c.ord").as("ord"), col("c.chunk").as("chunk"))
   }
 
   /** Sub-document exact dedup (the MassiveText/Gopher "repeated passage"
@@ -524,15 +522,7 @@ object Dedup {
     * step anywhere; at 100 TB the chunk shuffle is the cost and it is the
     * minimum any exact sub-document dedup must pay. */
   def chunkDedup(df: DataFrame, idCol: Column, textCol: Column, chunkTokens: Int): DataFrame = {
-    require(chunkTokens > 0, "chunkTokens must be positive")
-    val toks = col("__toks") // materialized attribute — see shingles() trap note
-    val nChunks = ceil(size(toks).cast("double") / chunkTokens).cast("int")
-    val chunkArr = transform(sequence(lit(0), nChunks - 1), i =>
-      struct(i.as("ord"),
-        array_join(slice(toks, i * chunkTokens + 1, lit(chunkTokens)), " ").as("chunk")))
-    val exploded = tokenized(df, idCol, textCol)
-      .select(col("id").as("doc_id"), explode(chunkArr).as("c"))
-      .select(col("doc_id"), col("c.ord").as("ord"), col("c.chunk").as("chunk"))
+    val exploded = tokenChunks(df, idCol, textCol, chunkTokens)
     val firstSeen = org.apache.spark.sql.expressions.Window
       .partitionBy(col("chunk")).orderBy(col("doc_id"), col("ord"))
     exploded.withColumn("__rn", row_number().over(firstSeen))
@@ -565,16 +555,8 @@ object Dedup {
     * second time. */
   def stripCommonChunks(df: DataFrame, idCol: Column, textCol: Column,
       chunkTokens: Int, maxDf: Int): DataFrame = {
-    require(chunkTokens > 0, "chunkTokens must be positive")
     require(maxDf >= 1, "maxDf must be >= 1")
-    val toks = col("__toks")
-    val nChunks = ceil(size(toks).cast("double") / chunkTokens).cast("int")
-    val chunkArr = transform(sequence(lit(0), nChunks - 1), i =>
-      struct(i.as("ord"),
-        array_join(slice(toks, i * chunkTokens + 1, lit(chunkTokens)), " ").as("chunk")))
-    val exploded = tokenized(df, idCol, textCol)
-      .select(col("id").as("doc_id"), explode(chunkArr).as("c"))
-      .select(col("doc_id"), col("c.ord").as("ord"), col("c.chunk").as("chunk"))
+    val exploded = tokenChunks(df, idCol, textCol, chunkTokens)
     val hot = exploded.groupBy(col("chunk"))
       .agg(count_distinct(col("doc_id")).as("__df"))
       .filter(col("__df") > maxDf)
@@ -693,22 +675,15 @@ object Dedup {
     * threshold the pair join plans as a BroadcastHashJoin (parallelism =
     * left partitions, key count irrelevant; measured: the default plan
     * here), and when both sides are corpus-scale the shuffle join's hot
-    * partitions are split adaptively by AQE's skew-join rule. `blocks` > 1
-    * block-salts the join STATICALLY for the remaining case (AQE off,
-    * static planning): left hashes into B blocks, right replicates into
-    * every block, key becomes (centroid_id, block) — k·B-way parallel,
-    * each pair still compared exactly once, output provably invariant for
-    * any B (spec-pinned). Default 1: measured 27% faster than B=4 at ×10
-    * because the salt's only effect under a broadcast plan is to multiply
-    * the broadcast payload. Precision is exact (native dot, round-6
+    * partitions are split adaptively by AQE's skew-join rule. (A static
+    * block salt on the join key was measured 27% SLOWER at ×10, since
+    * under a broadcast plan it only multiplies the broadcast payload; it
+    * is not offered.) Precision is exact (native dot, round-6
     * cosine — the oracle's float-op order); recall is bounded by the
     * clustering, which is the algorithm's documented trade. Building the
     * result runs the assignment once and keeps it ([[Materialize]]). */
   def semanticDedup(df: DataFrame, idCol: Column, vecCol: Column,
-                    centroids: DataFrame, threshold: Double,
-                    blocks: Int = 1): DataFrame = {
-    require(blocks >= 0, "blocks must be >= 0 (0 = default)")
-    val b = blocks.max(1)
+                    centroids: DataFrame, threshold: Double): DataFrame = {
     // materialize the assigned relation ONCE: it feeds both pair-join
     // sides AND the final kept-flag join — unmaterialized, each of the
     // three references replays the O(n·c·dim) assignment scan (n^1.5 at
@@ -716,15 +691,12 @@ object Dedup {
     val assigned = Materialize(Similarity.ivfAssign(df, idCol, vecCol, centroids)
       .withColumn("__sd_n", sqrt(Similarity.dot(col("v"), col("v")))))
     val right = assigned.select(col("centroid_id"), col("vec_id").as("__sd_bid"),
-        col("v").as("__sd_bv"), col("__sd_n").as("__sd_bn"))
-      .withColumn("__sd_blk", explode(sequence(lit(0), lit(b - 1))))
-    val left = assigned
-      .withColumn("__sd_blk", pmod(xxhash64(col("vec_id")), lit(b.toLong)).cast("int"))
+      col("v").as("__sd_bv"), col("__sd_n").as("__sd_bn"))
     // a row drops iff a smaller-id same-cluster neighbor clears the
     // threshold; distinct before the flag join so multi-witness rows count
     // once. Norms precompute per row — each candidate pair costs ONE
     // codegen'd native dot plus a divide, in dot/(|a|·|b|) oracle order.
-    val dropped = left.join(right, Seq("centroid_id", "__sd_blk"))
+    val dropped = assigned.join(right, Seq("centroid_id"))
       .filter(col("__sd_bid") < col("vec_id") &&
         round(Similarity.dot(col("v"), col("__sd_bv")) /
           (col("__sd_n") * col("__sd_bn")), 6) >= threshold)
@@ -760,16 +732,16 @@ object Dedup {
     val docs = df.select(idCol.as("id"), transform(vecCol, x => x.cast("double")).as("v"))
       .withColumn("n", sqrt(dot(col("v"), col("v"))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one (doc_id, band_id, band_hash) row per band, the bucket being the
+    // band's sign bits — the MinHash band shape, so the banded self-join
+    // is [[lshCandidates]]
     val sigs = array((0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        Similarity.hyperplaneSignature(col("v"), planesPerBand, b * planesPerBand).as("bucket"))): _*)
-    val banded = docs.select(col("id"), explode(sigs).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val cands = banded.select(col("band"), col("bucket"), col("id").as("a_id"))
-      .join(banded.select(col("band"), col("bucket"), col("id").as("b_id")), Seq("band", "bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    cands
+      struct(lit(b).as("band_id"),
+        Similarity.hyperplaneSignature(col("v"), planesPerBand, b * planesPerBand)
+          .as("band_hash"))): _*)
+    val banded = docs.select(col("id").as("doc_id"), explode(sigs).as("bb"))
+      .select(col("doc_id"), col("bb.band_id"), col("bb.band_hash"))
+    lshCandidates(banded)
       .join(docs.select(col("id").as("a_id"), col("v").as("a_v"), col("n").as("a_n")), "a_id")
       .join(docs.select(col("id").as("b_id"), col("v").as("b_v"), col("n").as("b_n")), "b_id")
       .withColumn("cos_sim", round(dot(col("a_v"), col("b_v")) / (col("a_n") * col("b_n")), 6))
@@ -865,6 +837,12 @@ object Dedup {
     labels
   }
 
+  /** (span_h): the DISTINCT positional n-gram span hashes of an eval set —
+    * the side both span-decontamination kernels broadcast. */
+  private def evalSpanSet(eval: DataFrame, evalText: Column, n: Int): DataFrame =
+    tokenized(eval, lit(0L), evalText)
+      .select(explode(spanHashes(col("__toks"), n)).as("span_h")).distinct()
+
   /** Span-level decontamination (the GPT-3/PaLM rule): a training doc is
     * contaminated wherever ANY of its token n-grams also occurs in the
     * eval set — stricter than doc-level Jaccard, which misses a verbatim
@@ -882,8 +860,7 @@ object Dedup {
     require(n > 0, "n must be positive")
     val trainSpans = tokenized(train, trainId, trainText)
       .select(col("id").as("doc_id"), explode(spanHashes(col("__toks"), n)).as("span_h"))
-    val evalSpans = tokenized(eval, lit(0L), evalText)
-      .select(explode(spanHashes(col("__toks"), n)).as("span_h")).distinct()
+    val evalSpans = evalSpanSet(eval, evalText, n)
     trainSpans
       .join(broadcast(evalSpans.withColumn("__hit", lit(1))), Seq("span_h"), "left")
       .groupBy(col("doc_id"))
@@ -912,8 +889,7 @@ object Dedup {
     val trainSpans = tokenized(train, trainId, trainText)
       .select(col("id").as("doc_id"),
         posexplode(spanHashes(col("__toks"), n)).as(Seq("start", "span_h")))
-    val evalSpans = tokenized(eval, lit(0L), evalText)
-      .select(explode(spanHashes(col("__toks"), n)).as("span_h")).distinct()
+    val evalSpans = evalSpanSet(eval, evalText, n)
     val dirty = trainSpans
       .join(broadcast(evalSpans), Seq("span_h"))
       .groupBy(col("doc_id")).agg(collect_set(col("start")).as("__dirty"))
@@ -1059,7 +1035,7 @@ object Dedup {
     *
     * 100 TB posture: one exchange on the variant key; hot keys (short or
     * templated strings) behave like any skewed join key — salt or cap via
-    * a maxDf-style prune upstream if the blocking key distribution
+    * a document-frequency prune upstream if the blocking key distribution
     * requires it. The n² form this replaces is the cartesian the brief
     * forbids. */
   def editDistance1Pairs(df: DataFrame, idCol: Column, strCol: Column): DataFrame = {
@@ -1095,7 +1071,7 @@ object Dedup {
     * a candidate (exact recall), while the rare-first order makes prefix
     * elements the least-shared ones (small candidate volume). A size
     * filter (|B| ≥ θ|A|, integer ppm form — J ≥ θ forces it) prunes
-    * before the exact `array_intersect` count decides. Never all-pairs:
+    * before the exact [[setJaccard]] count decides. Never all-pairs:
     * candidate volume is Σ_prefix-element df², bounded by the θ-driven
     * prefix length and the frequency order, vs n² for the naive form
     * (the oracle).
@@ -1167,19 +1143,6 @@ object Dedup {
       .filter(col("b_len") * lit(1000000L) >= col("a_len") * lit(thresholdPpm) &&
         col("a_len") * lit(1000000L) >= col("b_len") * lit(thresholdPpm))
       .select("a_id", "b_id").distinct()
-    val setsA = ordered.select(col("id").as("a_id"), col("tks").as("a_tks"),
-      col("len").as("a_len"))
-    val setsB = ordered.select(col("id").as("b_id"), col("tks").as("b_tks"),
-      col("len").as("b_len"))
-    cand.join(setsA, "a_id").join(setsB, "b_id")
-      .withColumn("i", size(array_intersect(col("a_tks"), col("b_tks"))).cast("long"))
-      .withColumn("u", col("a_len") + col("b_len") - col("i"))
-      .withColumn("jaccard_ppm",
-        // integral div, not floor(double /): a double quotient can round
-        // up across an integer boundary and shift the floor
-        expr("(i * 1000000L) div u"))
-      .filter(col("jaccard_ppm") >= thresholdPpm)
-      .select(col("a_id"), col("b_id"), col("i").as("n_common"),
-        col("u").as("n_union"), col("jaccard_ppm"))
+    setJaccard(cand, ordered, "id", "tks", "len", thresholdPpm)
   }
 }

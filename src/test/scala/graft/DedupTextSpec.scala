@@ -54,6 +54,24 @@ class DedupTextSpec extends SparkTestBase {
     assert(lsh.nonEmpty)
   }
 
+  test("a pair at J exactly the threshold is kept, with one ppm, by every Jaccard kernel") {
+    // trigram sets: A = {abc, bcd, cde, def}, B = A ∪ {efg} → |A∩B| = 4,
+    // |A∪B| = 5, J = 4/5 = 800000 ppm — ON the 0.8 bar, which is inclusive
+    val edge = Seq((0L, "alpha bravo charlie delta echo foxtrot"),
+      (1L, "alpha bravo charlie delta echo foxtrot golf"),
+      (2L, "some other words that share nothing at all")).toDF("doc_id", "text")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("a_id", "b_id", "jaccard_ppm").as[(Long, Long, Long)].collect().toSet
+    val expected = Set((0L, 1L, 800000L))
+    assert(pairs(Dedup.ngramJaccardPairs(edge, col("doc_id"), col("text"), 3, 800000L)) == expected)
+    // 64 bands of 2 rows: candidate odds at J = 0.8 are 1 − 0.36^64
+    assert(pairs(Dedup.minhashNearDupPairs(edge, col("doc_id"), col("text"),
+      n = 3, numHashes = 128, bands = 64, thresholdPpm = 800000L)) == expected)
+    val joined = Dedup.jaccardJoin(edge, col("doc_id"), Dedup.shingles(col("text"), 3), 800000L)
+    assert(pairs(joined) == expected)
+    assert(joined.select("n_common", "n_union").as[(Long, Long)].collect().toSeq == Seq((4L, 5L)))
+  }
+
   test("chunkWindows: stride overlap, short tail, single-chunk doc, coverage invariant") {
     val words = (1 to 150).map(i => s"w$i").mkString(" ")
     val cdocs = Seq((0L, words), (1L, "just five little words here")).toDF("doc_id", "text")
@@ -80,10 +98,11 @@ class DedupTextSpec extends SparkTestBase {
     val nearDup2 = base.replace("quick", "swift")
     val cdocs = Seq((0L, base), (1L, nearDup), (10L, nearDup2), (11L, unrelated))
       .toDF("doc_id", "text")
-    val inc = Dedup.minhashNearDupIncremental(
-        cdocs.filter(col("doc_id") < 10), cdocs.filter(col("doc_id") >= 10),
-        col("doc_id"), col("text"), 3, 64, 16, 700000L)
-      .select(col("a_id"), col("b_id")).as[(Long, Long)].collect().toSet
+    val (bands, sets) = Dedup.lshIndexBuild(cdocs.filter(col("doc_id") < 10),
+      col("doc_id"), col("text"), 3, 64, 16)
+    val (pairs, _, _) = Dedup.lshProbeAppend(bands, sets, cdocs.filter(col("doc_id") >= 10),
+      col("doc_id"), col("text"), 3, 64, 16, 700000L)
+    val inc = pairs.select(col("a_id"), col("b_id")).as[(Long, Long)].collect().toSet
     // the batch near-dup of base emits; the index-internal pair (0,1) must
     // not, even though it clears the threshold
     assert(inc.contains((0L, 10L)) && !inc.contains((0L, 1L)))
@@ -110,7 +129,7 @@ class DedupTextSpec extends SparkTestBase {
     assert(jac.isEmpty)
   }
 
-  test("containment maxDf knob drops ubiquitous-gram pairs only") {
+  test("containment: boilerplate-only docs are contained in every doc that embeds them") {
     // two docs overlap ONLY via a boilerplate sentence shared by all four
     val boiler = "subscribe to our newsletter for the latest updates and offers every single day"
     val cdocs = Seq(
@@ -122,13 +141,6 @@ class DedupTextSpec extends SparkTestBase {
     // 2 and 3 ARE the boilerplate: fully contained in everything
     assert(full.map(p => (p._1, p._2)) ==
       Set((0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L), (2L, 3L)))
-    // dropping grams present in >3 docs removes the boilerplate signal;
-    // only the identical pair (2,3) — intersecting on df<=3 grams too —
-    // could survive, and with every shared gram pruned nothing does
-    val pruned = Dedup.containmentPairs(cdocs, col("doc_id"), col("text"), 3,
-        900000L, maxDf = 3L)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(pruned.isEmpty)
   }
 
   test("simhash: near-dup within small hamming distance, unrelated far") {
@@ -823,27 +835,6 @@ class DedupTextSpec extends SparkTestBase {
     val plan = Text.gopherQuality(df, col("text")).queryExecution.executedPlan.toString
     assert("gopher_stats".r.findAllIn(plan).size <= 1,
       s"gopher_stats kernel inlined into multiple columns:\n$plan")
-  }
-
-  test("semantic dedup: block-salted pair join is output-invariant for any B") {
-    // 200 deterministic pseudo-random vectors, 4 centroids; the block salt
-    // changes ONLY how pairs distribute over tasks, never which pairs are
-    // compared — B=1 (single key per cluster) must equal B=7 (salted) and
-    // the auto default exactly, including every kept flag
-    val corpus = spark.range(0, 200).select(col("id").as("vec_id"),
-      array((0 until 4).map(j =>
-        (pmod(xxhash64(col("id") * 31 + lit(j)), lit(1000)).cast("double") / 500.0 - 1.0)
-          .cast("float")): _*).as("embedding"))
-    val centroids = spark.range(0, 4).select(col("id").as("centroid_id"),
-      array((0 until 4).map(j =>
-        when(col("id") === j, lit(1.0)).otherwise(lit(0.0))): _*).as("cvec"))
-    def run(b: Int) = Dedup.semanticDedup(
-        corpus, col("vec_id"), col("embedding"), centroids, 0.9, blocks = b)
-      .orderBy("vec_id").as[(Long, Long, Boolean)].collect().toSeq
-    val base = run(1)
-    assert(base.exists(!_._3) && base.exists(_._3), "fixture must have dups and survivors")
-    assert(run(7) == base)
-    assert(run(0) == base) // 0 normalizes to the default
   }
 
   test("bounded top-k aggregate ≡ row_number window on randomized inputs") {
