@@ -30,7 +30,7 @@ object Bench {
     * path, text/dedup/similarity pipelines. Excludes the deliberately
     * quadratic oracle formulations (ngram all-pairs, embedding all-pairs,
     * simhash all-pairs) — their scalable counterparts are included instead. */
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "q1_pricing_summary", "q3_shipping_topk", "q5_local_revenue", "q_window_rank",
     "q_rollup", "q_semi_anti", "q_json_extract", "q_time_window",
     "q_asof_join", "q_range_join",
@@ -90,7 +90,7 @@ object Bench {
     * quadratic oracle forms (sim_knn_graph, sim_knn_components,
     * dedup_embedding_lsh): their ×10 cost is a documented design constant,
     * not a regression signal. */
-  private val x10Set = Seq(
+  private[graft] val x10Set = Seq(
     "q1_pricing_summary", "q3_shipping_topk", "q_window_rank", "q_asof_join",
     "cdc_time_machine", "cdc_as_of_state", "cdc_agg_maintain", "cdc_chunk_checksum",
     "cdc_seq_gaps", "cdc_attribution",
@@ -145,10 +145,10 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
 
     // loadavg_start is the BOX-QUIETNESS measure, so it must be sampled
-    // before this process spins up its own 32 threads — the warmup + CDC
-    // fixture synthesis below push the 1-min loadavg to ~4-12 all by
-    // themselves, which is what the r8 artifact's "11.67" start actually
-    // recorded (self-load misread as a dirty box).
+    // before this process spins up its own 32 threads — the warmup and
+    // calibration below push the 1-min loadavg up all by themselves, which
+    // is what the r8 artifact's "11.67" start actually recorded (self-load
+    // misread as a dirty box).
     val loadStart = loadavg
     // untimed warmup: pay JVM/codegen/session costs outside the measurements
     try {
@@ -183,228 +183,16 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // The two CDC bench entries measure the WRITE PATH, not the sandbox's
-    // input-synthesis adapter (EventsAsCdc.*FromEvents — the stand-in for a
-    // live binlog; ~60% of their r3 wall time per the stage profile): the
-    // synthesized op/raw-event streams are pre-materialized to parquet ONCE,
-    // untimed, and the timed queries read the fixture and run only the
-    // operator pipeline. The correctness gate (Verify) still runs the full
-    // entries against the oracle; synthesis seconds are reported alongside.
     // optional comma-separated headline filter — local iteration only (the
     // driver sets neither, so its runs stay full)
-    val only: Set[String] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-        .orElse(x10Dir.map(_ => x10Set.toSet)).getOrElse(Set.empty)
-    val cdcSelected =
-      only.isEmpty || only.contains("cdc_time_machine") || only.contains("cdc_raw_adapter") ||
-        only.contains("cdc_as_of_state") || only.contains("cdc_snapshot_apply") ||
-        only.contains("cdc_scd2") || only.contains("cdc_snapshot_diff") ||
-        only.contains("cdc_scd2_apply") || only.contains("cdc_agg_maintain") ||
-        only.contains("cdc_join_maintain")
-    val cdcFix = java.nio.file.Files.createTempDirectory("graft-bench-cdc").toString
-    val synthT0 = System.nanoTime()
-    val cdcOverrides: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      if (!cdcSelected) Map.empty
-      else try {
-        import org.apache.spark.sql.functions.{col, element_at}
-        val events = SparkEntry.t(spark, sfDir, "events")
-        graft.operators.EventsAsCdc.opsFromEvents(spark, events)
-          .write.mode("overwrite").parquet(s"$cdcFix/ops")
-        graft.operators.EventsAsCdc.rawFromEvents(spark, events)
-          .write.mode("overwrite").parquet(s"$cdcFix/raw")
-        // the incremental-apply bench measures the OPERATOR against a
-        // STORED snapshot (its production shape): split-at-cut, snapshot
-        // fold, and batch extraction are part of the untimed fixture
-        locally {
-          import org.apache.spark.sql.functions.{broadcast, expr, max, unix_millis}
-          implicit val e = org.apache.spark.sql.Encoders.product[graft.streaming.Op]
-          val ops = spark.read.parquet(s"$cdcFix/ops").as[graft.streaming.Op]
-          val stamped = graft.streaming.TransactionAssembler.assembleBatch(ops).toDF()
-          val cells = graft.streaming.TimeMachineSink.organize(
-            graft.streaming.TimeMachineSink.mutationCells(stamped))
-          val thr = events.groupBy("user_id")
-            .agg(max(unix_millis(col("ts"))).as("cms"))
-            .agg(expr("(min(cms) + (max(cms) - min(cms)) * 7 div 8) * 1000").as("__cut"))
-          val w = cells.crossJoin(broadcast(thr))
-          graft.streaming.TimeMachineSink.latestCellsKeyed(
-              w.filter(col("cell_ts") <= col("__cut")))
-            .write.mode("overwrite").parquet(s"$cdcFix/snapshot")
-          w.filter(col("cell_ts") > col("__cut"))
-            .select("table", "row_key", "column", "value", "cell_ts", "event_id")
-            .write.mode("overwrite").parquet(s"$cdcFix/batch")
-          // the SCD2-apply bench likewise measures the fold against a
-          // STORED interval table (its production shape)
-          graft.streaming.TimeMachineSink.scd2Intervals(
-              w.filter(col("cell_ts") <= col("__cut")), Seq("value", "event_type"))
-            .write.mode("overwrite").parquet(s"$cdcFix/scd2hist")
-          // ...and the agg-maintain bench folds into a STORED aggregate view
-          locally {
-            import org.apache.spark.sql.functions.{count, element_at, lit, sum}
-            graft.streaming.TimeMachineSink.rowsAsOfCells(
-                spark.read.parquet(s"$cdcFix/snapshot"))
-              .select(element_at(col("cols"), "event_type").as("grp"),
-                element_at(col("cols"), "value").cast("decimal(18,2)").as("v"))
-              .groupBy("grp")
-              .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_value"))
-              .write.mode("overwrite").parquet(s"$cdcFix/aggview")
-          }
-          // ...and the join-view-maintain bench folds into a STORED join
-          // view + STORED count view over STORED retained cells (all three
-          // live in the warehouse in production; the timed work is the
-          // touched-key delta fold)
-          locally {
-            import org.apache.spark.sql.functions.{countDistinct, element_at}
-            w.filter(col("cell_ts") <= col("__cut"))
-              .select("table", "row_key", "column", "value", "cell_ts", "event_id")
-              .write.mode("overwrite").parquet(s"$cdcFix/retained")
-            val snapCells = spark.read.parquet(s"$cdcFix/retained")
-            val stB = snapCells.groupBy("row_key")
-              .agg(countDistinct(col("event_id")).as("n_events"),
-                max(col("event_id")).as("last_event_id"))
-            stB.write.mode("overwrite").parquet(s"$cdcFix/counts")
-            val stA = graft.streaming.TimeMachineSink.rowsAsOfCells(
-                spark.read.parquet(s"$cdcFix/snapshot"))
-              .select(col("row_key"),
-                element_at(col("cols"), "value").as("value"),
-                element_at(col("cols"), "event_type").as("event_type"))
-            stA.join(spark.read.parquet(s"$cdcFix/counts"), "row_key")
-              .write.mode("overwrite").parquet(s"$cdcFix/joinview")
-          }
-        }
-        Map(
-          "cdc_time_machine" -> ((s: SparkSession, _: String) => {
-            implicit val e = org.apache.spark.sql.Encoders.product[graft.streaming.Op]
-            val ops = s.read.parquet(s"$cdcFix/ops").as[graft.streaming.Op]
-            val stamped = graft.streaming.TransactionAssembler.assembleBatch(ops).toDF()
-            graft.streaming.TimeMachineSink.organize(
-                graft.streaming.TimeMachineSink.mutationCells(stamped))
-              .select(col("row_key"), col("column").as("col_name"), col("value"),
-                col("cell_ts"), col("event_id"))
-          }),
-          "cdc_as_of_state" -> ((s: SparkSession, d: String) => {
-            implicit val e = org.apache.spark.sql.Encoders.product[graft.streaming.Op]
-            import org.apache.spark.sql.functions.{broadcast, element_at, expr, max, unix_millis}
-            val ops = s.read.parquet(s"$cdcFix/ops").as[graft.streaming.Op]
-            val stamped = graft.streaming.TransactionAssembler.assembleBatch(ops).toDF()
-            val cells = graft.streaming.TimeMachineSink.organize(
-              graft.streaming.TimeMachineSink.mutationCells(stamped))
-            val thr = SparkEntry.t(s, d, "events").groupBy("user_id")
-              .agg(max(unix_millis(col("ts"))).as("cms"))
-              .agg(expr("(min(cms) + (max(cms) - min(cms)) * 7 div 8) * 1000").as("__as_of"))
-            val live = cells.crossJoin(broadcast(thr)).filter(col("cell_ts") <= col("__as_of"))
-            graft.streaming.TimeMachineSink.rowsAsOfCells(live)
-              .select(col("row_key"),
-                element_at(col("cols"), "value").as("value"),
-                element_at(col("cols"), "event_type").as("event_type"),
-                element_at(col("cols"), "row_status").as("row_status"),
-                col("state_ts"))
-          }),
-          "cdc_snapshot_apply" -> ((s: SparkSession, _: String) => {
-            val snapshot = s.read.parquet(s"$cdcFix/snapshot")
-            val batch = s.read.parquet(s"$cdcFix/batch")
-            graft.streaming.TimeMachineSink.rowsAsOfCells(
-                graft.streaming.TimeMachineSink.applyIncremental(snapshot, batch))
-              .select(col("row_key"),
-                element_at(col("cols"), "value").as("value"),
-                element_at(col("cols"), "event_type").as("event_type"),
-                element_at(col("cols"), "row_status").as("row_status"),
-                col("state_ts"))
-          }),
-          "cdc_scd2" -> ((s: SparkSession, _: String) => {
-            implicit val e = org.apache.spark.sql.Encoders.product[graft.streaming.Op]
-            val ops = s.read.parquet(s"$cdcFix/ops").as[graft.streaming.Op]
-            val stamped = graft.streaming.TransactionAssembler.assembleBatch(ops).toDF()
-            val cells = graft.streaming.TimeMachineSink.organize(
-              graft.streaming.TimeMachineSink.mutationCells(stamped))
-            graft.streaming.TimeMachineSink.scd2Intervals(cells, Seq("value", "event_type"))
-              .select(col("row_key"), col("valid_from"), col("valid_to"),
-                col("is_current"), col("value"), col("event_type"))
-          }),
-          "cdc_agg_maintain" -> ((s: SparkSession, _: String) => {
-            import org.apache.spark.sql.functions.{count, element_at, lit, sum}
-            // production shape: the stored view and stored snapshot are
-            // both pre-materialized; the timed work is the delta fold
-            val snapshot = s.read.parquet(s"$cdcFix/snapshot")
-            val storedAgg = s.read.parquet(s"$cdcFix/aggview")
-            graft.streaming.TimeMachineSink.maintainAggregate(storedAgg,
-              snapshot, s.read.parquet(s"$cdcFix/batch"), "event_type", "value")
-          }),
-          "cdc_join_maintain" -> ((s: SparkSession, _: String) => {
-            import org.apache.spark.sql.functions.{countDistinct, element_at, max, sum}
-            // production shape: stored retained cells, stored join view,
-            // stored count view; timed work = the touched-key delta fold
-            val retained = s.read.parquet(s"$cdcFix/retained")
-            val vOld = s.read.parquet(s"$cdcFix/joinview")
-            val bStored = s.read.parquet(s"$cdcFix/counts")
-            val batch = s.read.parquet(s"$cdcFix/batch")
-            val touched = batch.select("table", "row_key").distinct()
-            def stateA(c: org.apache.spark.sql.DataFrame) =
-              graft.streaming.TimeMachineSink.rowsAsOfCells(
-                  graft.streaming.TimeMachineSink.latestCellsKeyed(c))
-                .select(col("row_key"),
-                  element_at(col("cols"), "value").as("value"),
-                  element_at(col("cols"), "event_type").as("event_type"))
-            val touchedOld = retained.join(touched, Seq("table", "row_key"), "left_semi")
-            val aNew = stateA(touchedOld.unionByName(
-              batch.select(touchedOld.columns.map(col): _*)))
-            val bDelta = batch.groupBy("row_key")
-              .agg(countDistinct(col("event_id")).as("n_events"),
-                max(col("event_id")).as("last_event_id"))
-            val bNew = bStored.join(touched.select("row_key"), Seq("row_key"), "left_semi")
-              .unionByName(bDelta)
-              .groupBy("row_key")
-              .agg(sum(col("n_events")).as("n_events"),
-                max(col("last_event_id")).as("last_event_id"))
-            graft.streaming.TimeMachineSink.maintainKeyedJoin(vOld, aNew, bNew,
-                touched.select("row_key"), "row_key")
-              .select(col("row_key").as("user_id"), col("value"), col("event_type"),
-                col("n_events"), col("last_event_id"))
-          }),
-          "cdc_scd2_apply" -> ((s: SparkSession, _: String) => {
-            graft.streaming.TimeMachineSink.applyScd2(
-                s.read.parquet(s"$cdcFix/scd2hist"),
-                s.read.parquet(s"$cdcFix/batch"), Seq("value", "event_type"))
-              .select(col("row_key"), col("valid_from"), col("valid_to"),
-                col("is_current"), col("value"), col("event_type"))
-          }),
-          "cdc_snapshot_diff" -> ((s: SparkSession, d: String) => {
-            implicit val e = org.apache.spark.sql.Encoders.product[graft.streaming.Op]
-            import org.apache.spark.sql.functions.{broadcast, expr, max, unix_millis}
-            val ops = s.read.parquet(s"$cdcFix/ops").as[graft.streaming.Op]
-            val stamped = graft.streaming.TransactionAssembler.assembleBatch(ops).toDF()
-            val cells = graft.streaming.TimeMachineSink.organize(
-              graft.streaming.TimeMachineSink.mutationCells(stamped))
-            val thr = SparkEntry.t(s, d, "events").groupBy("user_id")
-              .agg(max(unix_millis(col("ts"))).as("cms"))
-              .agg(expr("(min(cms) + (max(cms) - min(cms)) * 4 div 8) * 1000").as("__t1"),
-                expr("(min(cms) + (max(cms) - min(cms)) * 7 div 8) * 1000").as("__t2"))
-            val w = cells.crossJoin(broadcast(thr))
-            graft.streaming.TimeMachineSink.snapshotDiff(w, col("__t1"), col("__t2"),
-                Seq("value", "event_type"))
-              .select(col("row_key"), col("change_type"),
-                col("old_value"), col("new_value"),
-                col("old_event_type"), col("new_event_type"))
-          }),
-          "cdc_raw_adapter" -> ((s: SparkSession, _: String) => {
-            implicit val e = org.apache.spark.sql.Encoders.product[graft.model.RawEvent]
-            val raw = s.read.parquet(s"$cdcFix/raw").as[graft.model.RawEvent]
-            val ops = graft.operators.RawBinlogAdapter.toOps(raw)
-            graft.streaming.TransactionAssembler.assembleBatch(ops).toDF()
-              .filter(col("kind").isin("INSERT", "UPDATE"))
-              .select(col("txnUuid").as("txn_uuid"), col("kind"),
-                element_at(col("after"), "event_id").cast("bigint").as("event_id"),
-                col("rowKey").as("row_key"),
-                col("commitTsMs").as("commit_ts"))
-          }))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] cdc fixture materialization failed, " +
-          s"falling back to full entries: $e")
-        Map.empty
-      }
-    val synthSec = (System.nanoTime() - synthT0) / 1e9
+    val only: Seq[String] =
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
+        .orElse(x10Dir.map(_ => x10Set)).getOrElse(Seq.empty)
+    val notHeadline = only.filterNot(headline.contains)
+    require(notHeadline.isEmpty, s"not in the headline set: ${notHeadline.mkString(",")}")
     val selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      headline.filter(n => only.isEmpty || only.contains(n)).flatMap { name =>
-        SparkEntry.queries.get(name).map(full => name -> cdcOverrides.getOrElse(name, full))
+      headline.filter(n => only.isEmpty || only.contains(n)).map { name =>
+        name -> SparkEntry.queries.getOrElse(name, sys.error(s"headline query $name has no spec"))
       }
 
     // (sec, loadavg-at-run-start) per run, accumulated across passes
@@ -477,7 +265,7 @@ object Bench {
     // line — the driver captures only the last ~2000 chars of stdout, and the
     // r6 full line (98 queries + load map) outgrew that window, so the round
     // shipped an unparseable BENCH_r06.json ("parsed": null).
-    val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","calib_sec":$calibSec%.3f,"queries":$qs,"sf":"$sfDir","loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"load":$loads,"runs_per_query":$passes,"reran":"${rerun.map(_._1).mkString(",")}","cdc_synthesis_sec":$synthSec%.3f}"""
+    val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","calib_sec":$calibSec%.3f,"queries":$qs,"sf":"$sfDir","loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"load":$loads,"runs_per_query":$passes,"reran":"${rerun.map(_._1).mkString(",")}"}"""
     // Artifact routing: filtered debug runs (SPARK_GRAFT_BENCH_ONLY set)
     // write to BENCH_solo.json so they can never clobber the committed
     // full-sweep reference; full runs refuse to overwrite the committed
@@ -545,10 +333,6 @@ object Bench {
     }
     sb.append("},\"named_omitted\":").append(results.size - kept).append('}')
     println(sb.toString)
-    try {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(cdcFix)).deleteRecursively()
-    } catch { case _: Throwable => () }
     spark.stop()
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines, from exact to
   * near-dup. Designed around one principle for 100 TB: never compare all
@@ -287,10 +288,18 @@ object Dedup {
     setsDf.write.mode("overwrite").parquet(s"$path/v=$version/sets")
   }
 
+  /** The stored index's two schemas, fixed by [[lshIndexBuild]] over a
+    * BIGINT id column. [[readLshIndex]] declares them, so opening a
+    * generation infers nothing and starts no job. */
+  val LshBandsSchema: StructType = StructType(Seq(StructField("doc_id", LongType),
+    StructField("band_id", IntegerType), StructField("band_hash", LongType)))
+  val LshSetsSchema: StructType =
+    StructType(Seq(StructField("id", LongType), StructField("sh", ArrayType(StringType))))
+
   def readLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       version: Long): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/v=$version/bands"),
-      spark.read.parquet(s"$path/v=$version/sets"))
+    (spark.read.schema(LshBandsSchema).parquet(s"$path/v=$version/bands"),
+      spark.read.schema(LshSetsSchema).parquet(s"$path/v=$version/sets"))
 
   /** One crawl-batch generation against a STORED LSH index: the batch
     * signs only itself, probes the stored band rows (plus its own, so

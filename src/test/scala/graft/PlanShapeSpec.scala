@@ -124,8 +124,11 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("cdc_time_machine: op synthesis scans the source exactly once") {
-    val p = plan("cdc_time_machine")
-    assert("Scan parquet".r.findAllIn(p).size == 1)
+    // cdc_time_machine reads the synthesized ops from the CDC fixture, so
+    // the synthesis is checked on its own plan
+    val ops = graft.operators.EventsAsCdc.opsFromEvents(spark, SparkEntry.t(spark, dir, "events"))
+    val p = ops.queryExecution.executedPlan.toString
+    assert("Scan parquet".r.findAllIn(p).size == 1, p)
   }
 
   test("ivf assignment is a pure scan-local projection: no join, no exchange") {
@@ -212,14 +215,11 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("r6: raw binlog adapter plans NO joins beyond table-map resolution when the batch has no XA") {
-    // the XA presence probe must prune both resolution joins out of the
-    // common zero-XA plan: the only join left is the as-of TABLE_MAP
-    // sort-merge (the binlog contract), and no join may key on the xid
-    val q = SparkEntry.queries("cdc_raw_adapter")(spark, dir)
-    val p = q.queryExecution.executedPlan.toString
-    assert(!p.contains("braXid") && !p.contains("decXid"),
-      s"XA legs must be pruned from a zero-XA batch:\n${p.take(3000)}")
-    spark.sharedState.cacheManager.clearCache()
+    // the supplier state machine resolves TABLE_MAPs and XA transactions
+    // inside each server's sorted event stream, so the adapter plans
+    // no join at all
+    val p = plan("cdc_raw_adapter")
+    assert(!p.contains("Join"), s"the raw adapter plans a join:\n${p.take(3000)}")
   }
 
   test("r6: scaled IVFADC fixture stays cross-product-free with broadcast probe plans") {

@@ -414,4 +414,29 @@ class PureSpec extends AnyFunSuite {
     // supplementary-plane (surrogate pair) counts once too
     assert(math.abs(entropy(u("a😀")) - math.log(2)) < 1e-12)
   }
+
+  // --- query registry ---
+
+  test("registry: unique spec names; Bench lists are specs; materialized oracles say so") {
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.distinct.size == names.size)
+    val known = names.toSet
+    assert(Bench.headline.filterNot(known) == Nil)
+    assert(Bench.x10Set.filterNot(known) == Nil)
+    assert(Bench.x10Set.filterNot(Bench.headline.contains) == Nil)
+    // DuckDB inlines a plain CTE at every reference; these step-chain
+    // oracles must keep every CTE materialized
+    val materialized = Seq("sim_mmr_rerank", "sim_knn_components", "dedup_keep_best",
+      "pipe_softdedup_weights", "dedup_cluster_stats", "pipe_leakage_split",
+      "pipe_clean_corpus", "dedup_resolve", "mm_phash_clusters",
+      "q_components_maintain", "q_components", "q_kcore", "cdc_as_of_state",
+      "sim_knn_graph", "sim_knn_graph_ivf", "text_gopher_repetition",
+      "dedup_minhash_lsh", "dedup_lsh_stored", "dedup_incremental_lsh",
+      "dedup_lsh_cdc")
+    val oracles = SparkEntry.oracleSql
+    materialized.foreach { n =>
+      assert(oracles(n).contains("AS MATERIALIZED ("), n)
+      assert("\\bAS \\(".r.findFirstIn(oracles(n)).isEmpty, s"$n has a plain CTE")
+    }
+  }
 }

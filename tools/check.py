@@ -17,8 +17,9 @@ so the pre-commit gate should always run strict.
 another Verify run (typically the parent commit's) instead of the oracle,
 always in strict mode: same columns, same engine types, same sorted rows.
 It covers the ROWS_ONLY queries the oracle cannot check, reports a query
-present on only one side, and never writes CHECK_local.json (that artifact
-records the oracle check).
+present on only one side, compares the two runs' oracle_sql.json maps
+(missing keys, extra keys, SQL strings that differ), and never writes
+CHECK_local.json (that artifact records the oracle check).
 """
 import sys, json, glob, os
 import duckdb
@@ -133,6 +134,15 @@ def outputs(out_dir):
             res[name] = d if glob.glob(f"{d}/*.parquet") else None
     return res
 
+def oracle_diff(base_dir, out_dir):
+    """Differences between two runs' oracle_sql.json maps, one line each."""
+    base = json.load(open(f"{base_dir}/oracle_sql.json"))
+    got = json.load(open(f"{out_dir}/oracle_sql.json"))
+    return ([f"missing oracle: {k}" for k in sorted(set(base) - set(got))] +
+            [f"extra oracle: {k}" for k in sorted(set(got) - set(base))] +
+            [f"oracle SQL differs: {k}" for k in sorted(set(base) & set(got))
+             if base[k] != got[k]])
+
 def main():
     global STRICT
     argv = sys.argv[1:]
@@ -185,6 +195,10 @@ def main():
         print(f"{flag} {k}: {v}")
     if against is not None:
         print(f"\n{ok}/{len(results)} identical to {against} (strict)")
+        diffs = oracle_diff(against, out_dir)
+        for d in diffs:
+            print(f"XX {d}")
+        print("oracle_sql.json: " + (f"{len(diffs)} difference(s)" if diffs else "identical"))
         return
     mode = "strict" if STRICT else "lax"
     print(f"\n{ok}/{len(results)} ok ({mode})")
